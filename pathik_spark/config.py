@@ -56,18 +56,22 @@ class CrawlConfig:
     # per-round stats beyond the core artifact counts cost extra jobs;
     # turn off for throughput runs (manifest then records -1 for them)
     collect_stats: bool = True
-    # bucket count for the prepared pages table. Fixed per run and
-    # DECOUPLED from cluster size (the layout must not change when
-    # executors are added); SIZED TO DATA: target ~128-512 MB per bucket
-    # AND >= ~4x the task slots so the straggler tail amortizes across
-    # waves. Measured on the 300k-page bench corpus at 16 slots:
-    # buckets == cores scales 3.4x N->4N, 64 buckets 3.9x, and 256
-    # buckets cut the 16-core wall another ~27% (64 buckets = 4 even
+    # bucket count for the prepared pages table: it sets the LAYOUT,
+    # fixed per run and DECOUPLED from cluster size (the layout must not
+    # change when executors are added); size it to the corpus: ~128-512
+    # MB per bucket AND >= ~4x the task slots so the straggler tail
+    # amortizes across waves. Measured on the 300k-page bench corpus at
+    # 16 slots: buckets == cores scales 3.4x N->4N, 64 buckets 3.9x, and
+    # 256 buckets cut the 16-core wall another ~27% (64 buckets = 4 even
     # waves, so each wave's straggler gates the stage; 256 amortizes the
-    # tail to 1/16 of a wave). On a small 20k-page corpus the per-bucket
-    # work is too thin for 256 (task overhead dominates; 64 wins), hence
-    # the modest default — scaling_bench pins 256 for its corpus, and a
-    # 10^10 deployment sizes this in the thousands.
+    # tail to 1/16 of a wave). A 20k-page corpus is too thin for 256,
+    # hence the modest default; scaling_bench pins 256 for its corpus
+    # and a 10^10 deployment sizes this in the thousands. The Python
+    # fetch+extract stage's TASK COUNT follows the round instead: a thin
+    # round (at most 16 rows a bucket, on up to 4 task slots: the sizes
+    # crawlbench measured) coalesces the bucketed join to 4x the task
+    # slots (plans/driver.python_stage_tasks), so it does not pay one
+    # Python worker set-up per bucket; denser rounds keep this count.
     pages_buckets: int = 64
     # the seen table is a per-round delta log; every K rounds the union
     # of deltas is rewritten as ONE table bucketed by url_hash so the

@@ -174,7 +174,9 @@ def schedule_round(
     and the deferred anti-join) — it is persisted so the canonicalize
     UDF + window chain runs once per round, not three times; pass
     ``persisted`` to collect the cache handles for end-of-round
-    unpersist (plans/driver does).
+    unpersist (plans/driver does). ``selected`` is the first handle
+    appended; its row count is the scheduled count before any per-round
+    limit.
     """
     selected = select_within_budget(candidates, n_salts=n_salts).persist()
     if persisted is not None:

@@ -63,6 +63,25 @@ def _parquet_row_count(spark: SparkSession, path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files)
 
 
+# The fetch+extract coalesce was measured on crawlbench only: 4 task
+# slots and rounds of at most 1,024 selected rows over 64 buckets (16 a
+# bucket). Denser rounds (scaling_bench's ~60-96k rows over 256 buckets)
+# and wider clusters keep one task per bucket until they are measured.
+COALESCE_MAX_ROWS_PER_BUCKET = 16
+COALESCE_MAX_SLOTS = 4
+
+
+def python_stage_tasks(n_rows: int, n_buckets: int, slots: int) -> int:
+    """Task count for a round's fetch+extract stage. Every Python task
+    pays a fixed worker set-up, so a thin round runs 4x the task slots
+    (the straggler rule config.pages_buckets follows) instead of one
+    task per bucket; any other round, and any round on more slots than
+    measured, keeps the bucket layout's count."""
+    if slots > COALESCE_MAX_SLOTS or n_rows > COALESCE_MAX_ROWS_PER_BUCKET * n_buckets:
+        return n_buckets
+    return min(n_buckets, 4 * slots)
+
+
 @dataclass
 class RoundStats:
     round: int
@@ -277,6 +296,24 @@ class CrawlRun:
             self._links_prepared = self.spark.read.parquet(path)
         return self._links_prepared
 
+    def _fetch_join(self, scheduled: DataFrame, selected: DataFrame) -> DataFrame:
+        """The round's fetch join, sized for the Python stage it feeds.
+        The join is exchange-free on the pages side, so a narrow
+        coalesce to python_stage_tasks partitions cuts the Python task
+        count of a thin round without touching the bucket layout.
+        ``selected`` is the persisted frame ``scheduled`` derives from;
+        it is counted only when the coalesce can fire at all."""
+        fetched = fetch_join(scheduled, self._prepared_pages(), prepared=True)
+        n_buckets = self.config.pages_buckets
+        slots = self.spark.sparkContext.defaultParallelism
+        if python_stage_tasks(0, n_buckets, slots) == n_buckets:
+            return fetched
+        n_rows = selected.count()
+        if self.config.limit_per_round is not None:
+            n_rows = min(n_rows, self.config.limit_per_round)
+        n_tasks = python_stage_tasks(n_rows, n_buckets, slots)
+        return fetched.coalesce(n_tasks) if n_tasks < n_buckets else fetched
+
     # -- one round ----------------------------------------------------------
     def run_round(
         self,
@@ -346,6 +383,7 @@ class CrawlRun:
         unseen = self._seen_filter(candidates, seen, bloom_bc).persist()
         persisted.append(unseen)
 
+        n_persisted = len(persisted)
         scheduled, deferred = schedule_round(
             unseen,
             n_salts=cfg.n_salts,
@@ -353,6 +391,7 @@ class CrawlRun:
             global_burst=cfg.global_burst,
             persisted=persisted,
         )
+        selected = persisted[n_persisted]
         _tick("schedule_rank")
         if cfg.limit_per_round is not None:
             over = scheduled.filter(F.col("crawl_order") > cfg.limit_per_round)
@@ -362,7 +401,7 @@ class CrawlRun:
             scheduled = scheduled.filter(F.col("crawl_order") <= cfg.limit_per_round)
 
         artifacts_plan = extract_artifacts(
-            fetch_join(scheduled, self._prepared_pages(), prepared=True),
+            self._fetch_join(scheduled, selected),
             fetch_cap=cfg.fetch_cap,
             with_markdown=cfg.content_type in ("markdown", "both"),
             with_links=cfg.discover_from_html,
@@ -685,7 +724,11 @@ class CrawlRun:
         for k in range(start, last + 1):
             delta = self.store.read_table(k, "seen").select(*SEEN_COLS)
             base = delta if base is None else base.select(*SEEN_COLS).unionByName(delta)
-        assert base is not None
+        if base is None:
+            raise LookupError(
+                f"run {self.config.run_id!r} has no committed 'seen' table "
+                f"up to round {last}"
+            )
         return base
 
     # -- multi-round with resume --------------------------------------------

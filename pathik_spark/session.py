@@ -3,6 +3,11 @@
 AQE + skew-join handling are on per BASELINE.json north_rule; shuffle
 partitions default to the local core count (overridable for a real
 cluster via normal spark-submit --conf).
+
+In local mode the Python workers share the driver's filesystem: they get
+the engine's package root on their path (UDFs referencing pathik_spark
+then unpickle from any cwd) and run the lean worker daemon
+(worker_daemon.py), which keeps Spark's archives off their import path.
 """
 
 from __future__ import annotations
@@ -10,6 +15,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -20,8 +27,14 @@ def get_spark(
 ) -> SparkSession:
     master = master or os.environ.get("PATHIK_SPARK_MASTER", "local[*]")
     cores = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
+    local = master.startswith("local")
     if shuffle_partitions is None:
-        shuffle_partitions = int(cores) if master.startswith("local") else 256
+        shuffle_partitions = int(cores) if local else 256
+    conf = dict(extra_conf or {})
+    if local:
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (PACKAGE_ROOT, conf.get(key)) if p)
+        conf.setdefault("spark.python.daemon.module", "pathik_spark.worker_daemon")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -55,7 +68,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PATHIK_DRIVER_MEM", "8g"))
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -23,6 +23,17 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 
+def committed_table_ref(manifest: dict | None, round_no: int, name: str) -> str:
+    """Where round ``round_no`` committed table ``name``; raises
+    LookupError naming both when the round is not committed or did not
+    write that table (resume must never read a partial round)."""
+    if manifest is None:
+        raise LookupError(f"round {round_no} is not committed: cannot read table {name!r}")
+    if name not in manifest["tables"]:
+        raise LookupError(f"table {name!r} is not in committed round {round_no}")
+    return manifest["tables"][name]
+
+
 def iceberg_available(spark: SparkSession) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
@@ -95,9 +106,8 @@ class SnapshotStore:
         return max(rounds) if rounds else None
 
     def read_table(self, round_no: int, name: str) -> DataFrame:
-        manifest = self.read_manifest(round_no)
-        assert manifest is not None, f"round {round_no} not committed"
-        return self.spark.read.parquet(manifest["tables"][name])
+        ref = committed_table_ref(self.read_manifest(round_no), round_no, name)
+        return self.spark.read.parquet(ref)
 
     def has_table(self, round_no: int, name: str) -> bool:
         manifest = self.read_manifest(round_no)
@@ -367,11 +377,9 @@ class IcebergSnapshotStore:
     def read_table(self, round_no: int, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
-        manifest = self.read_manifest(round_no)
-        assert manifest is not None, f"round {round_no} not committed"
-        assert name in manifest["tables"], f"table {name!r} not in round {round_no}"
+        ref = committed_table_ref(self.read_manifest(round_no), round_no, name)
         return (
-            self.spark.table(manifest["tables"][name])
+            self.spark.table(ref)
             .where(F.col(self.ROUND_COL) == int(round_no))
             .drop(self.ROUND_COL)
         )

@@ -152,6 +152,20 @@ def test_v2_round_protocol(spark, v2_store, tmp_path):
     assert all(r["count"] == 1 for r in rows)
 
 
+def test_read_table_on_uncommitted_round_raises(spark, v2_store, tmp_path):
+    """Both stores raise (not assert: ``python -O`` strips asserts) when
+    resume asks for a round or table that was never committed."""
+    parquet_store = SnapshotStore(spark, str(tmp_path / "pq"), "run-x")
+    for store in (parquet_store, v2_store):
+        store.write_table(0, "artifacts", _mini(spark, "a"))
+        with pytest.raises(LookupError, match=r"round 0 is not committed.*'artifacts'"):
+            store.read_table(0, "artifacts")
+        store.commit(0, ["artifacts"])
+        with pytest.raises(LookupError, match=r"'seen' is not in committed round 0"):
+            store.read_table(0, "seen")
+        assert store.read_table(0, "artifacts").count() == 5
+
+
 def test_v2_commit_missing_table_raises(spark, v2_store):
     v2_store.write_table(0, "artifacts", _mini(spark, "a"))
     with pytest.raises(FileNotFoundError, match="neither"):

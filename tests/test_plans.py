@@ -4,6 +4,8 @@ aggregation before the shuffle."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from pathik_spark.operators.frontier import prepare_frontier
@@ -127,6 +129,44 @@ def test_resume_preserves_pages_bucket_layout(spark, corpus, tmp_path):
     assert "Bucketed: true" in plan, plan
     # exactly one url_hash shuffle: the scheduled side; none for pages
     assert plan.count("hashpartitioning(url_hash") == 1, plan
+
+    # the round's artifacts plan over the driver's coalesced fetch join
+    # (a thin round: fewer Python tasks than buckets) keeps that shape
+    from pathik_spark.operators.fetch import extract_artifacts
+
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        with_url = prepare_frontier(corpus["seeds"]).select("url_hash", "url")
+        plan = _plan(extract_artifacts(run2._fetch_join(with_url, with_url)))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    slots = spark.sparkContext.defaultParallelism
+    assert re.search(rf"\) Coalesce\n(.+\n)*?Arguments: {4 * slots}\n", plan), plan
+    assert "ArrowEvalPython" in plan, plan
+    assert "Bucketed: true" in plan, plan
+    assert plan.count("hashpartitioning(url_hash") == 1, plan
+
+
+def test_python_stage_tasks_follow_the_round():
+    from pathik_spark.plans.driver import COALESCE_MAX_ROWS_PER_BUCKET, python_stage_tasks
+
+    thin = COALESCE_MAX_ROWS_PER_BUCKET * 64
+    # thin rounds (both crawlbench rounds): the 4x-slots floor
+    assert python_stage_tasks(214, 64, slots=4) == 16
+    assert python_stage_tasks(0, 64, slots=4) == 16
+    assert python_stage_tasks(thin, 64, slots=4) == 16
+    # any denser round keeps the bucket layout: scaling_bench's rounds
+    assert python_stage_tasks(thin + 1, 64, slots=4) == 64
+    assert python_stage_tasks(60_000, 256, slots=4) == 256
+    assert python_stage_tasks(96_000, 256, slots=16) == 256
+    # more slots than measured: one task per bucket even for thin rounds
+    assert python_stage_tasks(214, 256, slots=16) == 256
+    # never above the bucket count, even when the floor is
+    for n_rows in (0, 1, 10**3, 10**6, 10**9):
+        for buckets in (1, 4, 8, 64, 256):
+            for slots in (1, 2, 4, 64):
+                assert python_stage_tasks(n_rows, buckets, slots) <= buckets
+    assert python_stage_tasks(0, 8, slots=4) == 8
 
 
 def test_resume_bucket_count_follows_written_layout(spark, corpus, tmp_path):
