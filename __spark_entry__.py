@@ -224,7 +224,7 @@ def _q_crawl_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir=tempfile.mkdtemp(prefix="pathik_rel_"),
         config=CrawlConfig(
             run_id="rel", n_rounds=2, max_attempts=CRAWL_REL_MAX_ATTEMPTS,
-            use_bloom=False, collect_stats=False, content_type="html",
+            collect_stats=False, content_type="html",
             pages_buckets=8,
         ),
     )
@@ -298,9 +298,14 @@ def _q_seen_probe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     planned = planned_bloom_bytes(shard_counts(seen))
     shards = build_bloom_shards(seen, max_total_bytes=planned)
-    assert shards is not None
-    under = build_bloom_shards(seen, max_total_bytes=planned - 1)
-    assert under is None
+    if shards is None:
+        raise RuntimeError(
+            f"bloom build skipped at its own planned size ({planned} B)"
+        )
+    if build_bloom_shards(seen, max_total_bytes=planned - 1) is not None:
+        raise RuntimeError(
+            f"bloom build ran one byte under its planned size ({planned} B)"
+        )
     bc = spark.sparkContext.broadcast(shards)
     at_cap = seen_filter(fr, seen, bc).select(
         F.lit("at_cap").alias("arm"), "url"
@@ -309,32 +314,6 @@ def _q_seen_probe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("under_cap").alias("arm"), "url"
     )
     return at_cap.unionByName(under_cap)
-
-
-def _q_cuckoo_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cuckoo-sharded URL-seen filter (B2's second arm, deletion-capable
-    — operators/cuckoo.py) over the REAL operators; like the bloom arm,
-    a false positive only routes rows into the exact join, so the
-    oracle is the same exact anti-join on canonical URLs."""
-    from pathik_spark.entry_queries import URLS_CTE
-    from pathik_spark.operators.cuckoo import build_cuckoo_shards, cuckoo_seen_filter
-    from pathik_spark.operators.frontier import prepare_frontier
-
-    _register_views(spark, sf_dir)
-    seeds = spark.sql(
-        f"WITH {URLS_CTE} SELECT url, id AS seq, CAST(0 AS INT) AS priority FROM urls_cte"
-    )
-    seen_seeds = spark.sql(
-        f"WITH {URLS_CTE} SELECT url, id AS seq, CAST(0 AS INT) AS priority "
-        f"FROM urls_cte WHERE id % 3 = 0"
-    )
-    fr = prepare_frontier(seeds, num_shards=32)
-    seen = prepare_frontier(seen_seeds, num_shards=32).select(
-        "url_hash", "host_hash", "url"
-    )
-    shards = build_cuckoo_shards(seen)
-    bc = spark.sparkContext.broadcast(shards)
-    return cuckoo_seen_filter(fr, seen, bc).select("url")
 
 
 def _q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2249,7 +2228,6 @@ ENGINE_ORACLE_QUERIES = {
     "filename_assembly": _q_filename_assembly_engine,
     "bloom_seen_filter": _q_bloom_seen,
     "seen_probe_plan": _q_seen_probe_plan,
-    "cuckoo_seen_filter": _q_cuckoo_seen,
     "extract_text_vectorized": _q_extract_text,
     "css_select": _q_css_select,
     "minhash_lsh_pairs": _q_minhash_lsh_pairs,

@@ -31,27 +31,14 @@ class CrawlConfig:
     n_salts: int = 0  # scheduler skew salting (B4/H3); 0 = direct window
     global_period_ms: int | None = None  # crawler.go:26 parity mode only
     global_burst: int = 3
-    bloom_fpp: float = 0.01
-    use_bloom: bool = True
-    # which sharded pre-filter backs the URL-seen fast path (north-star
-    # "bloom/cuckoo"): blooms are smaller per key; the cuckoo filter
-    # supports DELETION, so TTL-expired URLs can be removed from the
-    # in-memory shards between rounds instead of rebuilding them
-    # (operators/cuckoo.expire_shards)
-    seen_prefilter: str = "bloom"  # bloom | cuckoo
-    # bloom pre-filter only pays for itself once the seen set is large;
-    # below this many seen rows the exact anti-join alone is faster
+    # the URL-seen check is the exact left-anti join; once the seen set
+    # reaches this many rows a per-host_hash bloom pre-filter (built at
+    # round start) is added in front of it
     bloom_min_seen: int = 100_000
-    # hard ceiling on the TOTAL bytes of pre-filter shards the driver
-    # may materialize and broadcast. The shard dict is driver-resident
-    # and broadcast whole, so it must fit comfortably in driver memory
-    # AND under broadcast limits: at fpp 0.01 a bloom costs ~1.2 B/URL
-    # (~12 GB at the 10^10-seen design point — far past any sane
-    # broadcast), a cuckoo ~2.4-4.8 B/URL. Beyond the cap the driver
-    # SKIPS the accelerator and the exact anti-join (always
-    # authoritative) carries the round alone — correctness never
-    # depends on the pre-filter, so the fall-through only costs speed.
-    # 256 MB default ≈ 2.1e8 seen URLs accelerated at fpp 0.01.
+    # cap on the bloom shards' total bytes: the shard dict is collected
+    # to the driver and broadcast whole (~1.2 B/URL). Past the cap the
+    # build is skipped and the exact anti-join carries the round alone.
+    # 256 MB ≈ 2.1e8 seen URLs.
     prefilter_max_bytes: int = 256 << 20
     # per-round stats beyond the core artifact counts cost extra jobs;
     # turn off for throughput runs (manifest then records -1 for them)
@@ -120,8 +107,8 @@ class CrawlConfig:
     # demonstrations, one counterexample vetoes) and strip the learned
     # (host, param) rules from every later round's seeds BEFORE
     # canonicalization — so alias variants stop consuming fetch budget.
-    # In-session advisory state like the bloom prebuild: a resume
-    # restarts with an empty rule set and relearns.
+    # In-session advisory state: a resume restarts with an empty rule
+    # set and relearns.
     learn_dust: bool = False
     dust_min_groups: int = 2
     # page-level REP compliance (robots.meta_robots_directives): when
@@ -157,10 +144,6 @@ class CrawlConfig:
             raise ValueError("max_message_bytes out of 1KB..100MB range (schema.py:226-232)")
         if self.n_rounds < 1 or self.num_shards < 1:
             raise ValueError("n_rounds and num_shards must be >= 1")
-        if self.seen_prefilter not in ("bloom", "cuckoo"):
-            raise ValueError(
-                f"seen_prefilter must be bloom|cuckoo, got {self.seen_prefilter}"
-            )
         if self.state_backend not in ("auto", "parquet", "iceberg"):
             raise ValueError(
                 f"state_backend must be auto|parquet|iceberg, got {self.state_backend}"

@@ -5580,9 +5580,6 @@ ENGINE_ORACLE_SQL = {
     "crawl_rounds_relational": duck_crawl_rounds_sql,
     "bloom_seen_filter": duck_bloom_seen_sql,
     "seen_probe_plan": duck_seen_probe_plan_sql,
-    # identical anti-join semantics: the cuckoo arm's false positives
-    # also only route rows INTO the exact join
-    "cuckoo_seen_filter": duck_bloom_seen_sql,
     "extract_text_vectorized": duck_extract_text_sql,
     "css_select": duck_css_select_sql,
     "minhash_lsh_pairs": duck_minhash_lsh_sql,

@@ -102,7 +102,6 @@ def recrawl_filter_adaptive(
     ttls: DataFrame,
     now,
     ts_col: str = "seen_ts",
-    bloom_shards_bc=None,
     url_ttls: DataFrame | None = None,
 ) -> DataFrame:
     """Per-host freshness-aware URL-seen: a seen record blocks the
@@ -121,9 +120,7 @@ def recrawl_filter_adaptive(
     bounded and broadcast onto the seen scan; ``url_ttls`` is per-URL
     (NOT broadcastable at 10^10) and equi-joins the seen side on url —
     both live in the shared url_hash bucket layout when stored, so the
-    join co-locates; the frontier side is untouched either way, and the
-    full-set bloom/cuckoo shards stay valid as the pre-filter (a bloom
-    miss is never-seen, hence never fresh-seen)."""
+    join co-locates; the frontier side is untouched either way."""
     from pathik_spark.functions.urls import hostname_of
     from pathik_spark.operators.seen import seen_filter
 
@@ -147,4 +144,4 @@ def recrawl_filter_adaptive(
     fresh = aged.filter(
         F.col("ttl_hours").isNull() | (age_s <= F.col("ttl_hours") * 3600.0)
     ).select("url_hash")
-    return seen_filter(frontier, fresh, bloom_shards_bc)
+    return seen_filter(frontier, fresh)

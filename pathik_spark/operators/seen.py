@@ -1,52 +1,36 @@
-"""URL-seen filter (J3/B2): exact anti-join semantics with a partitioned
-bloom-filter pre-filter for scale.
+"""URL-seen filter (J3/B2): an exact left-anti join, with a partitioned
+bloom pre-filter in front of it once the seen set is large.
 
 New-build per north_rule — the reference has no dedup at all (URLs are
 assumed unique per invocation; verified absent, SURVEY.md §2.4 J3).
 
-Gold semantics (always authoritative):
+Semantics (always authoritative):
 
     frontier.join(seen, "url_hash", "left_anti")
 
-Acceleration for 10^10-scale seen sets: per-``host_hash``-shard bloom
-filters. Each shard's bloom is built distributively (``applyInPandas``
-over the seen table grouped by shard), serialized, collected (a few KB
-per shard), and broadcast. The probe marks frontier rows "maybe seen";
-only those rows enter the exact anti-join, so the anti-join's left side
-shrinks to (new URLs that collide) ∪ (actually-seen URLs). A bloom false
-positive can only send a row *into* the exact join — never drop it — so
-the composition is exactly equal to the plain anti-join (property-tested
-in tests/test_seen.py).
+The seen set's size alone selects the arm: below
+``CrawlConfig.bloom_min_seen`` rows the driver runs the anti-join alone;
+at or above it, it builds per-``host_hash``-shard bloom filters at round
+start (``applyInPandas`` over the seen table grouped by shard, collected
+and broadcast) and passes them to ``seen_filter``. The probe marks
+frontier rows "maybe seen"; only those rows enter the exact anti-join. A
+false positive can only send a row *into* the exact join, never drop it,
+so both arms return the same rows (tests/test_seen.py).
 
-The bloom itself is a deterministic double-hashing blocked bloom over
-the already-computed xxhash64 ``url_hash`` (no Python string hashing in
-the hot path; numpy vectorized).
+The bloom is a deterministic double-hashing bloom over the
+already-computed xxhash64 ``url_hash`` (numpy vectorized, no Python
+string hashing).
 
-Scale regimes (honest sizing):
-- seen <= ~10^9: broadcast blooms as below (~1.2 GB at 1% fpp for 10^9
-  keys — fits executor memory; shard granularity keeps build parallel).
-- seen ~ 10^10 (the north_rule design point): broadcasting 12 GB of
-  bloom bits is off the table. The right layout is *co-partitioning*:
-  the per-round seen deltas (plans/driver writes the seen table as an
-  append-only delta log) are periodically compacted
-  (``seen_compact_every``) — at scale that compaction writes ONE table
-  bucketed by url_hash with a fixed bucket count (the same
-  one-file-per-bucket discipline as the prepared pages table), so the
-  exact anti-join shuffles only the much smaller frontier side onto
-  the bucketing, and the bloom shard for a bucket can be built/probed
-  executor-side within the bucket's task. The exact anti-join remains
-  the semantics either way, so the choice is purely a physical knob
-  (``use_bloom`` in CrawlConfig).
+At scale the seen table is a per-round delta log that is periodically
+compacted (``seen_compact_every``) into ONE table bucketed by url_hash
+(``seen_buckets``), so the anti-join shuffles only the frontier side.
 
-The boundary between the regimes is ENFORCED, not advisory:
+The shards are driver-resident, so their size is capped:
 ``build_bloom_shards(max_total_bytes=...)`` (fed by
 ``CrawlConfig.prefilter_max_bytes``, default 256 MB) computes the exact
-planned bitset bytes from a cheap per-shard count aggregation BEFORE
-building, and skips the accelerator past the cap — so the driver's
-memory envelope is bounded by construction and a 10^10-seen run
-degrades to the (authoritative) exact anti-join instead of a 12 GB
-driver-resident broadcast. Cap-boundary exactness is pinned by
-tests/test_seen.py::test_prefilter_cap_boundary and the driver-swept
+planned bitset bytes from a per-shard count aggregation BEFORE building
+and returns None past the cap; the anti-join then runs alone. Pinned by
+tests/test_seen.py::test_prefilter_cap_boundary and the
 ``seen_probe_plan`` oracle entry.
 """
 
@@ -194,7 +178,8 @@ def seen_filter(
     """
     if seen is None:
         return frontier
-    seen_keys = seen.select("url_hash").distinct()
+    # no distinct(): a left-anti join ignores duplicates on its right side
+    seen_keys = seen.select("url_hash")
     if bloom_shards_bc is None:
         return frontier.join(seen_keys, "url_hash", "left_anti")
 
@@ -225,22 +210,15 @@ def recrawl_filter(
     seen: DataFrame | None,
     cutoff,
     ts_col: str = "seen_ts",
-    bloom_shards_bc=None,
 ) -> DataFrame:
     """Freshness-aware URL-seen: a seen record only blocks the frontier
     while it is at/after ``cutoff`` (i.e. younger than the recrawl TTL);
     staler records expire and the URL re-enters the frontier — the
     recrawl policy a long-running crawl needs on top of the absolute
-    seen filter.
-
-    Composes soundly with the bloom pre-filter built over the FULL seen
-    set: a bloom miss is guaranteed never-seen, hence also not
-    fresh-seen; bloom hits are verified by the exact anti-join against
-    the fresh subset anyway. So the shards broadcast by the driver stay
-    usable unchanged, and the only extra work vs seen_filter is the
-    timestamp predicate pushed into the seen-side scan.
+    seen filter. The only extra work vs seen_filter is the timestamp
+    predicate pushed into the seen-side scan.
     """
     if seen is None:
         return frontier
     fresh = seen.filter(F.col(ts_col) >= cutoff).select("url_hash")
-    return seen_filter(frontier, fresh, bloom_shards_bc)
+    return seen_filter(frontier, fresh)

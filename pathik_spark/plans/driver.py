@@ -136,11 +136,6 @@ class CrawlRun:
         )
         self._pages_prepared: DataFrame | None = None
         self._links_prepared: DataFrame | None = None
-        # bloom shards for round k+1 are built DURING round k's derived
-        # writes (overlapped) — at round start the build would otherwise
-        # be a serial job on the critical path before any scheduling
-        self._bloom_future = None
-        self._bloom_for_round: int | None = None
         # adaptive per-host AIMD budgets + exponential delays
         # (config.adaptive_backoff): updated each round from the
         # committed artifacts, overlaid on the robots table next round;
@@ -166,27 +161,6 @@ class CrawlRun:
         import re
 
         return "pathik_" + re.sub(r"[^A-Za-z0-9_]", "_", self.config.run_id) + "_" + suffix
-
-    # -- seen pre-filter backend (north-star "bloom/cuckoo") -----------------
-    def _build_prefilter_shards(self, seen: DataFrame):
-        # prefilter_max_bytes bounds the driver-resident broadcast dict:
-        # past the cap the build returns None and the exact anti-join
-        # (always authoritative) carries the round alone
-        cap = self.config.prefilter_max_bytes
-        if self.config.seen_prefilter == "cuckoo":
-            from pathik_spark.operators.cuckoo import build_cuckoo_shards
-
-            return build_cuckoo_shards(seen, max_total_bytes=cap)
-        return build_bloom_shards(
-            seen, fpp=self.config.bloom_fpp, max_total_bytes=cap
-        )
-
-    def _seen_filter(self, frontier: DataFrame, seen, shards_bc) -> DataFrame:
-        if self.config.seen_prefilter == "cuckoo":
-            from pathik_spark.operators.cuckoo import cuckoo_seen_filter
-
-            return cuckoo_seen_filter(frontier, seen, shards_bc)
-        return seen_filter(frontier, seen, shards_bc)
 
     def _prepared_pages(self) -> DataFrame:
         """Pages keyed by canonical url_hash, materialized ONCE per run as
@@ -368,19 +342,16 @@ class CrawlRun:
         candidates = filter_disallowed(attach_robots(fr, robots_eff))
 
         bloom_bc = None
-        if cfg.use_bloom and seen is not None and seen_size_hint >= cfg.bloom_min_seen:
-            if self._bloom_future is not None and self._bloom_for_round == round_no:
-                shards = self._bloom_future.result()  # prebuilt last round
-            else:
-                shards = self._build_prefilter_shards(seen)
-            self._bloom_future = None
+        if seen is not None and seen_size_hint >= cfg.bloom_min_seen:
+            # None past prefilter_max_bytes: the exact anti-join runs alone
+            shards = build_bloom_shards(seen, max_total_bytes=cfg.prefilter_max_bytes)
             if shards:
                 bloom_bc = spark.sparkContext.broadcast(shards)
         # unseen feeds both the budget selection and the deferred anti-join;
         # persist (small url-metadata rows, no html) so the canonicalize UDF
         # + robots + seen chain runs once per round. Unpersisted at commit.
         persisted: list[DataFrame] = []
-        unseen = self._seen_filter(candidates, seen, bloom_bc).persist()
+        unseen = seen_filter(candidates, seen, bloom_bc).persist()
         persisted.append(unseen)
 
         n_persisted = len(persisted)
@@ -644,12 +615,6 @@ class CrawlRun:
             seen_total = seen_size_hint + art_counts["f"]  # upper-bound estimate
         # next-frontier emptiness from parquet footers (driver-side, no job)
         nf_rows = _parquet_row_count(spark, nf_path)
-        # prebuild round-(k+1)'s bloom shards now, overlapped with the
-        # next round's compute (the build is a full scan of the seen set —
-        # serial at round start, free here)
-        if cfg.use_bloom and nf_rows > 0 and seen_total >= cfg.bloom_min_seen:
-            self._bloom_future = pool.submit(self._build_prefilter_shards, seen_out)
-            self._bloom_for_round = round_no + 1
         stats = RoundStats(
             round=round_no,
             scheduled=art_counts["n"],

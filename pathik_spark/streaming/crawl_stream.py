@@ -13,7 +13,7 @@ in rounds).
 
 Scale notes: everything before foreachBatch is stateless expression or
 state-store-backed (the seen state is keyed by the 8-byte url_hash —
-the streaming twin of the bloom/cuckoo-sharded batch anti-join; with a
+the streaming twin of the batch URL-seen anti-join; with a
 watermark the dedup uses dropDuplicatesWithinWatermark so seen keys are
 EVICTED past the delay — bounded state; without one it is exact
 lifetime dedup with state growing in distinct URLs). The micro-batch

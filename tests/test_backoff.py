@@ -97,7 +97,7 @@ def test_crawl_run_backoff_limits_flaky_host(spark, tmp_path):
     cfg = CrawlConfig(
         run_id="backoff-t", n_rounds=2, adaptive_backoff=True,
         backoff_base_budget=8, backoff_min_budget=1, backoff_step=2,
-        backoff_threshold_bp=5000, max_attempts=10, use_bloom=False,
+        backoff_threshold_bp=5000, max_attempts=10,
         pages_buckets=4, num_shards=64,
     )
     run = CrawlRun(spark, pages, robots, None, str(tmp_path), cfg)
@@ -191,7 +191,7 @@ def test_honor_meta_robots_blocks_nofollow_discovery(spark, tmp_path):
     )
     cfg = CrawlConfig(
         run_id="rep-t", n_rounds=1, honor_meta_robots=True,
-        discover_from_html=True, use_bloom=False, pages_buckets=4,
+        discover_from_html=True, pages_buckets=4,
         num_shards=64,
     )
     run = CrawlRun(spark, pages, robots, None, str(tmp_path), cfg)
@@ -226,7 +226,7 @@ def test_analyze_crawl_report(spark, tmp_path):
     )
     run = CrawlRun(
         spark, pages, robots, None, str(tmp_path),
-        CrawlConfig(run_id="rep", n_rounds=2, use_bloom=False,
+        CrawlConfig(run_id="rep", n_rounds=2,
                     pages_buckets=4, num_shards=64, max_attempts=2),
     )
     run.run(seeds, n_rounds=2, resume=False)
@@ -269,8 +269,7 @@ def test_analyze_crawl_survives_gc(spark, corpus, tmp_path):
     run = CrawlRun(
         spark, corpus["pages"], corpus["robots"], corpus["links"],
         str(tmp_path),
-        CrawlConfig(run_id="repgc", n_rounds=4, use_bloom=False,
-                    seen_compact_every=2),
+        CrawlConfig(run_id="repgc", n_rounds=4, seen_compact_every=2),
     )
     run.run(corpus["seeds"], n_rounds=4, resume=False)
     deleted = run.store.gc(keep_rounds=1)

@@ -183,7 +183,7 @@ def test_adaptive_backoff_stream_matches_batch(spark, tmp_path):
     run = CrawlRun(
         spark, pages, robots, None, str(tmp_path / "batch"),
         CrawlConfig(
-            run_id="aimd", n_rounds=2, max_attempts=1, use_bloom=False,
+            run_id="aimd", n_rounds=2, max_attempts=1,
             adaptive_backoff=True, backoff_base_budget=8,
             backoff_threshold_bp=2000, backoff_step=1, pages_buckets=4,
         ),

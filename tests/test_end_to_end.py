@@ -151,8 +151,7 @@ def test_discovery_loop_robots_to_sitemap_to_prioritized_crawl(spark, tmp_path):
     )
     run = CrawlRun(
         spark, pages, robots_rules, None, str(tmp_path),
-        CrawlConfig(run_id="disc-e2e", use_bloom=False, pages_buckets=4,
-                    num_shards=64),
+        CrawlConfig(run_id="disc-e2e", pages_buckets=4, num_shards=64),
     )
     run.run(seeds, n_rounds=1, resume=False)
     arts = run.store.read_table(0, "artifacts").collect()

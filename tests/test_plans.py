@@ -81,7 +81,7 @@ def test_seen_compact_bucketed_no_seen_side_exchange(spark, corpus, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # exactly ONE shuffle on the join key — the frontier side; the seen
-    # side's distinct+join reuse the bucketed layout with no Exchange
+    # side's anti-join reuses the bucketed layout with no Exchange
     assert plan.count("hashpartitioning(url_hash") == 1, plan
     # and the seen side is read as a bucketed scan
     assert "Bucketed: true" in plan, plan
@@ -280,8 +280,7 @@ def test_store_gc_preserves_resume(spark, corpus, tmp_path):
     from pathik_spark.plans.driver import CrawlRun
 
     def mk(path, run_id):
-        cfg = CrawlConfig(run_id=run_id, n_rounds=5, seen_compact_every=2,
-                          use_bloom=False)
+        cfg = CrawlConfig(run_id=run_id, n_rounds=5, seen_compact_every=2)
         return CrawlRun(spark, corpus["pages"], corpus["robots"],
                         corpus["links"], str(path), cfg)
 
@@ -310,8 +309,7 @@ def test_store_gc_noop_without_compact(spark, corpus, tmp_path):
     from pathik_spark.config import CrawlConfig
     from pathik_spark.plans.driver import CrawlRun
 
-    cfg = CrawlConfig(run_id="gc3", n_rounds=3, seen_compact_every=0,
-                      use_bloom=False)
+    cfg = CrawlConfig(run_id="gc3", n_rounds=3, seen_compact_every=0)
     run = CrawlRun(spark, corpus["pages"], corpus["robots"], corpus["links"],
                    str(tmp_path), cfg)
     run.run(corpus["seeds"], n_rounds=3, resume=False)

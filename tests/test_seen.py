@@ -1,5 +1,6 @@
-"""URL-seen filter (J3/B2): bloom-sharded pre-filter must be exactly
-equivalent to the authoritative anti-join (property per SURVEY.md §7-M3)."""
+"""URL-seen filter (J3/B2): the bloom-sharded pre-filter must be exactly
+equivalent to the authoritative anti-join (property per SURVEY.md §7-M3),
+in the operator and in a driven crawl."""
 
 from __future__ import annotations
 
@@ -85,29 +86,6 @@ def test_recrawl_filter_readmits_stale_seen(spark, corpus):
     assert stale - fresh_blocked <= got
 
 
-def test_recrawl_filter_composes_with_full_set_bloom(spark, corpus):
-    from pathik_spark.operators.seen import recrawl_filter
-
-    fr = _frontier(corpus).cache()
-    seen = (
-        fr.filter(F.col("seq") % 3 == 0)
-        .select("url_hash", "host_hash")
-        .withColumn(
-            "seen_ts",
-            F.when(F.pmod(F.col("url_hash"), F.lit(2)) == 0, F.lit(100)).otherwise(
-                F.lit(10_000)
-            ),
-        )
-    )
-    # bloom built over the FULL seen set (as the driver does), TTL applied inside
-    shards = build_bloom_shards(seen, fpp=0.05)
-    bc = spark.sparkContext.broadcast(shards)
-    with_bloom = recrawl_filter(fr, seen, cutoff=F.lit(5_000), bloom_shards_bc=bc, ts_col="seen_ts")
-    without = recrawl_filter(fr, seen, cutoff=F.lit(5_000), ts_col="seen_ts")
-    a = {r["url_hash"] for r in with_bloom.select("url_hash").collect()}
-    b = {r["url_hash"] for r in without.select("url_hash").collect()}
-    assert a == b
-
 def test_prefilter_cap_boundary(spark, corpus):
     """max_total_bytes: at the exact planned size the build proceeds;
     one byte below it falls through to None, and composition with
@@ -133,18 +111,57 @@ def test_prefilter_cap_boundary(spark, corpus):
     assert a == b
 
 
-def test_cuckoo_cap_boundary(spark, corpus):
-    from pathik_spark.operators.cuckoo import (
-        build_cuckoo_shards,
-        planned_cuckoo_bytes,
-    )
-    from pathik_spark.operators.seen import shard_counts
+def test_forced_bloom_crawl_equals_exact_and_builds_inline(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """bloom_min_seen only picks the physical arm: a 3-round crawl with
+    the bloom forced on (bloom_min_seen=0) writes the same round tables
+    and counts as one whose seen set never reaches the threshold. The
+    forced run builds the shards once per round that reads a seen set,
+    on the thread that called run()."""
+    import threading
 
-    fr = _frontier(corpus).cache()
-    seen = fr.filter(F.col("seq") % 3 == 0).select("url_hash", "host_hash", "url")
-    planned = planned_cuckoo_bytes(shard_counts(seen))
-    at_cap = build_cuckoo_shards(seen, max_total_bytes=planned)
-    assert at_cap is not None
-    # planned is an upper bound on what was actually materialized
-    assert sum(len(tbl) for (_, tbl) in at_cap.values()) <= planned
-    assert build_cuckoo_shards(seen, max_total_bytes=0) is None
+    from pathik_spark.config import CrawlConfig
+    from pathik_spark.plans import driver
+
+    builds: list[int] = []
+    real_build = driver.build_bloom_shards
+
+    def counted_build(*args, **kwargs):
+        builds.append(threading.get_ident())
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(driver, "build_bloom_shards", counted_build)
+
+    def crawl(arm: str, bloom_min_seen: int):
+        builds.clear()
+        run = driver.CrawlRun(
+            spark,
+            pages=corpus["pages"],
+            robots=corpus["robots"],
+            links=corpus["links"],
+            state_dir=str(tmp_path / arm),
+            config=CrawlConfig(run_id="bloom-eq", bloom_min_seen=bloom_min_seen),
+        )
+        stats = run.run(corpus["seeds"], n_rounds=3)
+        tables = {}
+        for k in range(len(stats)):
+            for name in ("artifacts", "seen", "next_frontier"):
+                df = run.store.read_table(k, name)
+                rows = df.select(*sorted(df.columns)).collect()
+                tables[(k, name)] = sorted(map(tuple, rows), key=repr)
+        counts = [
+            (s.round, s.scheduled, s.fetched, s.missing, s.deferred,
+             s.retried, s.discovered, s.seen_total)
+            for s in stats
+        ]
+        return tables, counts, list(builds)
+
+    forced_tables, forced_counts, forced_builds = crawl("forced", 0)
+    exact_tables, exact_counts, exact_builds = crawl("exact", 10**12)
+    assert len(forced_counts) == 3
+    assert forced_counts == exact_counts
+    assert forced_tables == exact_tables
+    assert exact_builds == []
+    # rounds 1 and 2 read a seen set; round 0 starts from the seeds
+    assert forced_builds == [threading.get_ident()] * 2
