@@ -323,14 +323,12 @@ def _q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection + link-farm anchor penalty + body fallback). Byte-identity
     against the fixture corpus is separately pinned in tests/."""
     from pathik_spark.entry_queries import SPARK, extract_html_sql
-    from pathik_spark.functions.extract_udfs import extract_text_udf
+    from pathik_spark.functions.extract_udfs import make_extract_udf
 
     _register_views(spark, sf_dir)
     pages = spark.sql(extract_html_sql(SPARK))
-    return pages.select(
-        "doc_id",
-        extract_text_udf(F.encode(F.col("html_str"), "UTF-8")).alias("extracted"),
-    )
+    text = make_extract_udf(("text",))(F.encode(F.col("html_str"), "UTF-8"))["text"]
+    return pages.select("doc_id", text.alias("extracted"))
 
 
 def _q_css_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,17 +349,19 @@ def _q_css_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Href extraction for frontier discovery (from-html mode): the REAL
-    links UDF (one parse per page; fused with X5/X6 in production via
-    extract_full) runs over HTML templated around the documents table;
-    the DuckDB oracle states the resolved document-order hrefs (nav /
-    fragment / mailto anchors dropped, relative hrefs resolved against
-    base_url per RFC 3986)."""
+    links UDF (one parse per page; in production the same UDF also
+    yields X5/X6 text and markdown) runs over HTML templated around the
+    documents table; the DuckDB oracle states the resolved document-order
+    hrefs (nav / fragment / mailto anchors dropped, relative hrefs
+    resolved against base_url per RFC 3986)."""
     from pathik_spark.entry_queries import SPARK, links_html_sql
-    from pathik_spark.functions.extract_udfs import extract_links_udf
+    from pathik_spark.functions.extract_udfs import make_extract_udf
 
     _register_views(spark, sf_dir)
     pages = spark.sql(links_html_sql(SPARK))
-    links = extract_links_udf(F.encode(F.col("html_str"), "UTF-8"), F.col("base_url"))
+    links = make_extract_udf(("links",))(
+        F.encode(F.col("html_str"), "UTF-8"), F.col("base_url")
+    )["links"]
     return pages.select("doc_id", F.posexplode(links).alias("pos", "dst_url"))
 
 
@@ -1659,13 +1659,16 @@ def _q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     templated HTML (head traversed for title/meta, nav h1 excluded,
     og:description fallback) vs the DuckDB-stated expected values."""
     from pathik_spark.entry_queries import metadata_html_sql
-    from pathik_spark.functions.extract_udfs import extract_metadata_udf
+    from pathik_spark.functions.extract_udfs import METADATA_TYPE, page_udf
+    from pathik_spark.kernels.extract import extract_metadata
 
     _register_views(spark, sf_dir)
     pages = spark.sql(metadata_html_sql()).select(
         "doc_id", F.encode(F.col("html_str"), "UTF-8").alias("html")
     )
-    meta = pages.select("doc_id", extract_metadata_udf(F.col("html")).alias("m"))
+    meta = pages.select(
+        "doc_id", page_udf(extract_metadata, METADATA_TYPE)(F.col("html")).alias("m")
+    )
     return meta.select("doc_id", "m.title", "m.description", "m.h1", "m.n_headings")
 
 

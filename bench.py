@@ -219,10 +219,11 @@ def main() -> None:
     # warm the Python-worker pool + Arrow UDF path out of the timing
     # (first UDF stage on a fresh JVM pays worker spawn + codegen; a
     # 512-page untimed pass removes ~2.5x of cold-start from trial 1)
-    from pathik_spark.functions.extract_udfs import extract_text_udf as _xt
+    from pathik_spark.functions.extract_udfs import make_extract_udf
 
+    text_udf = make_extract_udf(("text",))
     corpus["pages"].limit(512).select(
-        F.length(_xt(F.col("html"))).alias("n")
+        F.length(text_udf(F.col("html"))["text"]).alias("n")
     ).agg(F.sum("n")).collect()
 
     crawl_runs: list[tuple[float, int]] = []
@@ -243,14 +244,12 @@ def main() -> None:
     extras["crawl_urls_per_sec"] = round(n_urls / best_dt, 2)
 
     # extraction-only throughput (the X5 kernel at full width)
-    from pathik_spark.functions.extract_udfs import extract_text_udf
-
     pages = corpus["pages"]
     n_pages = pages.count()
 
     def _extract_once() -> float:
         t0 = time.perf_counter()
-        pages.select(F.length(extract_text_udf(F.col("html"))).alias("n")).agg(
+        pages.select(F.length(text_udf(F.col("html"))["text"]).alias("n")).agg(
             F.sum("n")
         ).collect()
         return time.perf_counter() - t0

@@ -12,10 +12,9 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pathik_spark.kernels.extract import FETCH_CAP, SAVE_CAP
+from pathik_spark.kernels.extract import FETCH_CAP
 
 SESSION_ID_RE = re.compile(r"^[A-Za-z0-9._-]{1,64}$")  # main.go:67-87
-COMPRESSIONS = ("gzip", "snappy", "lz4", "zstd")  # schema.py:210-214
 
 
 @dataclass
@@ -26,7 +25,6 @@ class CrawlConfig:
     limit_per_round: int | None = None  # schema.py:101-105 (1..10000)
     max_attempts: int = 3  # crawler.go:33
     fetch_cap: int = FETCH_CAP  # crawler.go:38
-    save_cap: int = SAVE_CAP  # storage.go:211-216
     num_shards: int = 4096  # host_hash shards (B1)
     n_salts: int = 0  # scheduler skew salting (B4/H3); 0 = direct window
     global_period_ms: int | None = None  # crawler.go:26 parity mode only
@@ -125,8 +123,6 @@ class CrawlConfig:
     # crawler product token: robots.txt group selection (RFC 9309) when
     # the robots input is raw robots_txt bodies rather than a rules table
     user_agent: str = "pathik"
-    kafka_compression: str = "gzip"  # kafka.go:152-165 default
-    max_message_bytes: int = 10 * 1024 * 1024  # schema.py:205-243 range
     extra: dict = field(default_factory=dict)
 
     def validate(self) -> "CrawlConfig":
@@ -138,10 +134,6 @@ class CrawlConfig:
             raise ValueError("limit_per_round out of range 1..10000 (schema.py:101-105)")
         if not (1 <= self.max_attempts <= 10):
             raise ValueError("max_attempts out of range")
-        if self.kafka_compression not in COMPRESSIONS:
-            raise ValueError(f"compression must be one of {COMPRESSIONS} (schema.py:210-214)")
-        if not (1024 <= self.max_message_bytes <= 100 * 1024 * 1024):
-            raise ValueError("max_message_bytes out of 1KB..100MB range (schema.py:226-232)")
         if self.n_rounds < 1 or self.num_shards < 1:
             raise ValueError("n_rounds and num_shards must be >= 1")
         if self.state_backend not in ("auto", "parquet", "iceberg"):

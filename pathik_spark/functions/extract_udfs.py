@@ -1,19 +1,23 @@
-"""Vectorized Arrow UDFs for the extraction kernels (X5/X6).
+"""Vectorized Arrow UDFs for the extraction kernels (X5/X6/X10, page
+metadata, anchors, CSS selection).
 
 Reference behavior: ExtractHTMLContent (crawler.go:229-239) and
 ConvertToMarkdown (crawler.go:242-249), with the fetch-side 20 MB
 truncation (crawler.go:38,193-198) applied *before* extraction to
 preserve the reference invariant (SURVEY.md §2.2 F6).
 
-The UDF bodies call the normative kernel functions directly — the same
-code that produced the golden fixture columns — so byte-identity of the
-Spark output reduces to Arrow round-trip fidelity (utf-8, \r\n, null
-bytes are covered by fixture strata).
+One factory, ``page_udf``, wraps a per-page kernel and its Spark return
+type in one Arrow batch loop. The UDF bodies call the normative kernel
+functions directly — the same code that produced the golden fixture
+columns — so byte-identity of the Spark output reduces to Arrow
+round-trip fidelity (utf-8, \r\n, null bytes are covered by fixture
+strata).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -21,92 +25,64 @@ from pyspark.sql import types as T
 
 from pathik_spark.kernels import extract as X
 
+_PART_TYPES = {
+    "text": T.StringType(),
+    "markdown": T.StringType(),
+    "links": T.ArrayType(T.StringType()),
+}
 
-def make_extract_text_udf(fetch_cap: int = X.FETCH_CAP):
-    @F.pandas_udf(T.StringType())
-    def extract_text_udf(html: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in html:
-            yield batch.map(lambda b: X.extract_text(b, fetch_cap))
-
-    return extract_text_udf
-
-
-def make_to_markdown_udf(fetch_cap: int = X.FETCH_CAP):
-    @F.pandas_udf(T.StringType())
-    def to_markdown_udf(html: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in html:
-            yield batch.map(lambda b: X.to_markdown(b, fetch_cap))
-
-    return to_markdown_udf
+# kernels/extract.extract_metadata: (title, description, h1, n_headings)
+METADATA_TYPE = T.StructType(
+    [T.StructField(name, T.StringType()) for name in ("title", "description", "h1")]
+    + [T.StructField("n_headings", T.IntegerType())]
+)
+# kernels/extract.extract_anchors: document-order (url, anchor) pairs
+ANCHORS_TYPE = T.ArrayType(
+    T.StructType([T.StructField(name, T.StringType()) for name in ("url", "anchor")])
+)
 
 
-def make_extract_both_udf(fetch_cap: int = X.FETCH_CAP):
-    """Fused (text, markdown) extraction: ONE parse per page instead of
-    two — the production hot path (X5+X6 in a single Arrow pass)."""
-    schema = T.StructType(
-        [T.StructField("text", T.StringType()), T.StructField("markdown", T.StringType())]
-    )
+def page_udf(kernel: Callable, return_type: T.DataType, with_url: bool = False):
+    """Arrow-batched pandas UDF applying ``kernel`` to every page.
 
-    @F.pandas_udf(schema)
-    def extract_both_udf(html: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in html:
-            texts, mds = [], []
-            for b in batch:
-                t, m = X.extract_both(b, fetch_cap)
-                texts.append(t)
-                mds.append(m)
-            yield pd.DataFrame({"text": texts, "markdown": mds})
+    ``kernel(html)`` — or ``kernel(html, url)`` when ``with_url``, the
+    url null-coalesced to '' — returns one row's value: a tuple in field
+    order for a struct ``return_type``, a plain value otherwise. PySpark
+    reads the UDF's arity from its type hints, so the html-only and the
+    html+url bodies are written out side by side."""
+    if isinstance(return_type, T.StructType):
+        names = return_type.fieldNames()
 
-    return extract_both_udf
+        def frame(rows: list) -> pd.DataFrame:
+            return pd.DataFrame(rows, columns=names)
+    else:
+        frame = pd.Series
 
+    if with_url:
 
-def make_extract_full_udf(fetch_cap: int = X.FETCH_CAP):
-    """Fused (text, markdown, links) extraction: ONE parse per page feeds
-    the artifact columns AND frontier link discovery (from-html mode) —
-    no second pass over the corpus for hrefs."""
-    schema = T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("markdown", T.StringType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
-        ]
-    )
+        @F.pandas_udf(return_type)
+        def html_url_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
+            for html, url in it:
+                yield frame([kernel(b, u or "") for b, u in zip(html, url)])
 
-    @F.pandas_udf(schema)
-    def extract_full_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for html, url in it:
-            texts, mds, links = [], [], []
-            for b, u in zip(html, url):
-                t, m, l = X.extract_full(b, u or "", fetch_cap)
-                texts.append(t)
-                mds.append(m)
-                links.append(l)
-            yield pd.DataFrame({"text": texts, "markdown": mds, "links": links})
+        return html_url_udf
 
-    return extract_full_udf
+    @F.pandas_udf(return_type)
+    def html_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        for html in it:
+            yield frame([kernel(b) for b in html])
+
+    return html_udf
 
 
-def make_extract_text_links_udf(fetch_cap: int = X.FETCH_CAP):
-    """Fused (text, links) extraction — the from-html discovery path with
-    content_type='html': one parse, no markdown work."""
-    schema = T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def extract_text_links_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for html, url in it:
-            texts, links = [], []
-            for b, u in zip(html, url):
-                t, l = X.extract_text_links(b, u or "", fetch_cap)
-                texts.append(t)
-                links.append(l)
-            yield pd.DataFrame({"text": texts, "links": links})
-
-    return extract_text_links_udf
+def make_extract_udf(parts: tuple[str, ...] = ("text", "markdown"), fetch_cap: int = X.FETCH_CAP):
+    """struct<parts…> per page from ONE parse (kernels/extract.extract_page).
+    Call it on the html column, plus the url column when ``"links"`` is
+    in ``parts`` (the base for resolving relative hrefs)."""
+    parts = tuple(parts)
+    schema = T.StructType([T.StructField(p, _PART_TYPES[p]) for p in parts])
+    kernel = partial(X.extract_page, fetch_cap=fetch_cap, parts=parts)
+    return page_udf(kernel, schema, with_url="links" in parts)
 
 
 def make_select_udf(selector: str, fetch_cap: int = X.FETCH_CAP):
@@ -117,86 +93,5 @@ def make_select_udf(selector: str, fetch_cap: int = X.FETCH_CAP):
     the compiled group."""
     from pathik_spark.kernels import selector as S
 
-    group = S.parse_selector(selector)  # validate + compile driver-side
-
-    @F.pandas_udf(T.StringType())
-    def select_udf(html: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        def one(b):
-            doc = X.decode_html(b, fetch_cap)
-            if not doc.strip():
-                return ""
-            paras: list[str] = []
-            for node in S.select_nodes(X.parse_html(doc), group):
-                paras.extend(X._paragraphs(node))
-            return "\n\n".join(paras)
-
-        for batch in html:
-            yield batch.map(one)
-
-    return select_udf
-
-
-def make_extract_links_udf(fetch_cap: int = X.FETCH_CAP):
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def extract_links_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for html, url in it:
-            yield pd.Series(
-                [X.extract_links(b, u or "", fetch_cap) for b, u in zip(html, url)]
-            )
-
-    return extract_links_udf
-
-
-def make_extract_anchors_udf(fetch_cap: int = X.FETCH_CAP):
-    """(href, anchor_text) pairs per page — the anchor-text signal pass
-    (kernels/extract.extract_anchors): array<struct<url, anchor>>."""
-    schema = T.ArrayType(
-        T.StructType(
-            [T.StructField("url", T.StringType()), T.StructField("anchor", T.StringType())]
-        )
-    )
-
-    @F.pandas_udf(schema)
-    def extract_anchors_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for html, url in it:
-            yield pd.Series(
-                [
-                    [{"url": a, "anchor": t} for a, t in X.extract_anchors(b, u or "", fetch_cap)]
-                    for b, u in zip(html, url)
-                ]
-            )
-
-    return extract_anchors_udf
-
-
-def make_extract_metadata_udf(fetch_cap: int = X.FETCH_CAP):
-    """Page metadata (kernels/extract.extract_metadata):
-    struct<title, description, h1, n_headings>."""
-    schema = T.StructType(
-        [
-            T.StructField("title", T.StringType()),
-            T.StructField("description", T.StringType()),
-            T.StructField("h1", T.StringType()),
-            T.StructField("n_headings", T.IntegerType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def extract_metadata_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for html in it:
-            rows = [X.extract_metadata(b, fetch_cap) for b in html]
-            yield pd.DataFrame(
-                rows, columns=["title", "description", "h1", "n_headings"]
-            )
-
-    return extract_metadata_udf
-
-
-# default-cap singletons for plan assembly
-extract_text_udf = make_extract_text_udf()
-to_markdown_udf = make_to_markdown_udf()
-extract_both_udf = make_extract_both_udf()
-extract_full_udf = make_extract_full_udf()
-extract_links_udf = make_extract_links_udf()
-extract_anchors_udf = make_extract_anchors_udf()
-extract_metadata_udf = make_extract_metadata_udf()
+    group = S.parse_selector(selector)
+    return page_udf(partial(S.select_text, selector=group, fetch_cap=fetch_cap), T.StringType())

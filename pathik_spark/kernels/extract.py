@@ -1,5 +1,5 @@
-"""Normative pure-Python extraction kernels: HTML -> article text and
-HTML -> Markdown.
+"""Normative pure-Python extraction kernels: HTML -> article text,
+Markdown, outlinks, anchor pairs and page metadata.
 
 The reference pipes fetched HTML through go-shiori/go-readability
 (/root/reference/crawler/crawler.go:229-239, ``ExtractHTMLContent``) and
@@ -10,7 +10,13 @@ normative extractor (SURVEY.md §5.2.2, §7-H1): the golden ``text`` column
 in the fixtures is produced by it, and the Spark-side vectorized Arrow UDF
 (pathik_spark.functions.extract_udfs) runs the identical code — the
 per-row invariant "byte-identical extracted text per url" is enforced by
-tests comparing the two paths.
+tests comparing the two paths, and tests/test_extract.py pins a digest of
+every extraction arm's output.
+
+One entry point, ``extract_page``, parses a page once and returns any
+of its text, markdown and links; ``extract_text``, ``to_markdown``,
+``extract_both`` and ``extract_links`` are one-line calls to it.
+``extract_anchors`` and ``extract_metadata`` are separate passes.
 
 Determinism rules: no wall clock, no locale, no dict-order dependence, no
 randomness. Content caps mirror the reference: fetch truncation at
@@ -37,6 +43,7 @@ Readability-lite algorithm (documented spec, integer arithmetic only):
 from __future__ import annotations
 
 from html.parser import HTMLParser
+from urllib.parse import urljoin, urlsplit
 
 FETCH_CAP = 20 * 1024 * 1024  # crawler.go:38
 SAVE_CAP = 10 * 1024 * 1024  # storage.go:211-216
@@ -192,16 +199,6 @@ def _paragraphs(node: Node) -> list[str]:
     return paras
 
 
-def extract_text(html_bytes: bytes | None, fetch_cap: int = FETCH_CAP) -> str:
-    """HTML bytes -> article plain text (the golden per-row invariant)."""
-    html = decode_html(html_bytes, fetch_cap)
-    if not html.strip():
-        return ""
-    root = parse_html(html)
-    article = find_article(root)
-    return "\n\n".join(_paragraphs(article))
-
-
 # ---------------------------------------------------------------------------
 # HTML -> Markdown (deterministic rule set; reference behavior anchor:
 # crawler.go:242-249 with default converter rules)
@@ -341,33 +338,6 @@ def _md_table(table: Node, out: list[str]) -> None:
     out.append("\n".join(lines))
 
 
-def to_markdown(html_bytes: bytes | None, fetch_cap: int = FETCH_CAP) -> str:
-    """HTML bytes -> Markdown of the extracted article subtree."""
-    html = decode_html(html_bytes, fetch_cap)
-    if not html.strip():
-        return ""
-    root = parse_html(html)
-    article = find_article(root)
-    out: list[str] = []
-    _md_blocks(article, out)
-    return "\n\n".join(out)
-
-
-def extract_both(html_bytes: bytes | None, fetch_cap: int = FETCH_CAP) -> tuple[str, str]:
-    """(text, markdown) from ONE parse + ONE article selection — the hot
-    path the fused Spark UDF uses; byte-identical to calling extract_text
-    and to_markdown separately (same tree, same article node)."""
-    html = decode_html(html_bytes, fetch_cap)
-    if not html.strip():
-        return "", ""
-    root = parse_html(html)
-    article = find_article(root)
-    text = "\n\n".join(_paragraphs(article))
-    out: list[str] = []
-    _md_blocks(article, out)
-    return text, "\n\n".join(out)
-
-
 # ---------------------------------------------------------------------------
 # href extraction (frontier link discovery from fetched HTML — new-build
 # per north_rule; the reference crawler has no recursion/link-following,
@@ -385,38 +355,80 @@ def _collect_hrefs(node: Node, out: list[str]) -> None:
             _collect_hrefs(child, out)
 
 
-def _resolve_hrefs(hrefs: list[str], base_url: str) -> list[str]:
-    """Filter + resolve raw href values: strip whitespace, drop empty /
-    fragment-only / non-http(s) targets, resolve relative hrefs against
-    ``base_url`` (RFC 3986 urljoin). Document order and duplicates are
-    KEPT — frontier dedup is the seen-filter's job."""
-    from urllib.parse import urljoin, urlsplit
+def _resolve_href(href: str, base_url: str) -> str | None:
+    """One raw href value -> its absolute http(s) target, or None: strip
+    whitespace, drop empty / fragment-only / non-http(s) targets,
+    resolve relative hrefs against ``base_url`` (RFC 3986 urljoin)."""
+    href = href.strip()
+    if not href or href.startswith("#"):
+        return None
+    absolute = urljoin(base_url, href) if base_url else href
+    return absolute if urlsplit(absolute).scheme.lower() in ("http", "https") else None
 
-    out: list[str] = []
-    for href in hrefs:
-        href = href.strip()
-        if not href or href.startswith("#"):
-            continue
-        absolute = urljoin(base_url, href) if base_url else href
-        scheme = urlsplit(absolute).scheme.lower()
-        if scheme in ("http", "https"):
-            out.append(absolute)
-    return out
+
+def extract_page(
+    html_bytes: bytes | None,
+    base_url: str = "",
+    fetch_cap: int = FETCH_CAP,
+    parts: tuple[str, ...] = ("text", "markdown"),
+) -> tuple:
+    """The requested ``parts`` of one page, in ``parts`` order, from ONE
+    decode + parse:
+
+    - ``text``: article plain text (the golden per-row invariant);
+    - ``markdown``: Markdown of the same article subtree;
+    - ``links``: document-order resolved hrefs of <a> anchors over the
+      WHOLE tree (anchors outside the article count), skipping dropped
+      subtrees (nav/header/footer/script/... anchors are site chrome,
+      not discovery targets); relative hrefs resolve against
+      ``base_url``. Duplicates are KEPT — frontier dedup is the
+      seen-filter's job.
+
+    The article is selected only when text or markdown is asked for.
+    An empty page yields '' for text/markdown and [] for links."""
+    html = decode_html(html_bytes, fetch_cap)
+    if not html.strip():
+        return tuple([] if part == "links" else "" for part in parts)
+    root = parse_html(html)
+    article = find_article(root) if "text" in parts or "markdown" in parts else root
+    out: list = []
+    for part in parts:
+        if part == "text":
+            out.append("\n\n".join(_paragraphs(article)))
+        elif part == "markdown":
+            blocks: list[str] = []
+            _md_blocks(article, blocks)
+            out.append("\n\n".join(blocks))
+        elif part == "links":
+            hrefs: list[str] = []
+            _collect_hrefs(root, hrefs)
+            resolved = (_resolve_href(href, base_url) for href in hrefs)
+            out.append([absolute for absolute in resolved if absolute is not None])
+        else:
+            raise ValueError(f"unknown extraction part {part!r}")
+    return tuple(out)
+
+
+def extract_text(html_bytes: bytes | None, fetch_cap: int = FETCH_CAP) -> str:
+    """HTML bytes -> article plain text (the golden per-row invariant)."""
+    return extract_page(html_bytes, "", fetch_cap, ("text",))[0]
+
+
+def to_markdown(html_bytes: bytes | None, fetch_cap: int = FETCH_CAP) -> str:
+    """HTML bytes -> Markdown of the extracted article subtree."""
+    return extract_page(html_bytes, "", fetch_cap, ("markdown",))[0]
+
+
+def extract_both(html_bytes: bytes | None, fetch_cap: int = FETCH_CAP) -> tuple[str, str]:
+    """(text, markdown) from one parse and one article selection."""
+    return extract_page(html_bytes, "", fetch_cap, ("text", "markdown"))
 
 
 def extract_links(
     html_bytes: bytes | None, base_url: str = "", fetch_cap: int = FETCH_CAP
 ) -> list[str]:
-    """Document-order resolved hrefs of <a> anchors, skipping dropped
-    subtrees (nav/header/footer/script/... anchors are site chrome, not
-    discovery targets)."""
-    html = decode_html(html_bytes, fetch_cap)
-    if not html.strip():
-        return []
-    root = parse_html(html)
-    hrefs: list[str] = []
-    _collect_hrefs(root, hrefs)
-    return _resolve_hrefs(hrefs, base_url)
+    """Document-order resolved hrefs (extract_page's ``links`` part)."""
+    return extract_page(html_bytes, base_url, fetch_cap, ("links",))[0]
 
 
 def _collect_anchor_pairs(node: Node, out: list) -> None:
@@ -442,21 +454,15 @@ def extract_anchors(
     extract_links (empty / fragment-only / non-http dropped, RFC 3986
     resolution); anchor text is the anchor subtree's whitespace-
     collapsed text (may be '' for image anchors)."""
-    from urllib.parse import urljoin, urlsplit
-
     html = decode_html(html_bytes, fetch_cap)
     if not html.strip():
         return []
-    root = parse_html(html)
     pairs: list = []
-    _collect_anchor_pairs(root, pairs)
+    _collect_anchor_pairs(parse_html(html), pairs)
     out: list[tuple[str, str]] = []
     for href, text in pairs:
-        href = href.strip()
-        if not href or href.startswith("#"):
-            continue
-        absolute = urljoin(base_url, href) if base_url else href
-        if urlsplit(absolute).scheme.lower() in ("http", "https"):
+        absolute = _resolve_href(href, base_url)
+        if absolute is not None:
             out.append((absolute, text))
     return out
 
@@ -526,43 +532,6 @@ def extract_metadata(
             h1 = _collapse_ws(_node_text(h))
             break
     return (title, description, h1, len(headings))
-
-
-def extract_full(
-    html_bytes: bytes | None, base_url: str = "", fetch_cap: int = FETCH_CAP
-) -> tuple[str, str, list[str]]:
-    """(text, markdown, links) from ONE parse — the production artifacts
-    pass when link discovery comes from the fetched html itself. text and
-    markdown are byte-identical to extract_both (same tree, same article);
-    links come from the full tree (anchors outside the article count)."""
-    html = decode_html(html_bytes, fetch_cap)
-    if not html.strip():
-        return "", "", []
-    root = parse_html(html)
-    article = find_article(root)
-    text = "\n\n".join(_paragraphs(article))
-    out: list[str] = []
-    _md_blocks(article, out)
-    hrefs: list[str] = []
-    _collect_hrefs(root, hrefs)
-    return text, "\n\n".join(out), _resolve_hrefs(hrefs, base_url)
-
-
-def extract_text_links(
-    html_bytes: bytes | None, base_url: str = "", fetch_cap: int = FETCH_CAP
-) -> tuple[str, list[str]]:
-    """(text, links) from ONE parse — the from-html discovery path when
-    markdown is NOT requested (content_type='html'): skips the markdown
-    renderer entirely instead of computing and discarding it."""
-    html = decode_html(html_bytes, fetch_cap)
-    if not html.strip():
-        return "", []
-    root = parse_html(html)
-    article = find_article(root)
-    text = "\n\n".join(_paragraphs(article))
-    hrefs: list[str] = []
-    _collect_hrefs(root, hrefs)
-    return text, _resolve_hrefs(hrefs, base_url)
 
 
 def truncate_for_save(content: str, save_cap: int = SAVE_CAP) -> str:

@@ -168,17 +168,16 @@ def select_nodes(root: Node, selector: str | list) -> list[Node]:
 
 
 def select_text(
-    html_bytes: bytes | None, selector: str, fetch_cap: int = FETCH_CAP
+    html_bytes: bytes | None, selector: str | list, fetch_cap: int = FETCH_CAP
 ) -> str:
     """Matched elements' text, article-extraction whitespace discipline
     (collapsed paragraphs joined by blank lines); '' when nothing
-    matches or the document is empty."""
+    matches or the document is empty. ``selector`` is a selector string
+    or a group already compiled by parse_selector."""
     html = decode_html(html_bytes, fetch_cap)
     if not html.strip():
         return ""
-    root = parse_html(html)
-    group = parse_selector(selector)
     paras: list[str] = []
-    for node in select_nodes(root, group):
+    for node in select_nodes(parse_html(html), selector):
         paras.extend(_paragraphs(node))
     return "\n\n".join(paras)

@@ -27,15 +27,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pathik_spark.functions.extract_udfs import extract_anchors_udf
+from pathik_spark.functions.extract_udfs import ANCHORS_TYPE, page_udf
 from pathik_spark.functions.urls import hostname_of
+from pathik_spark.kernels.extract import extract_anchors
 
 
 def page_anchors(
     pages: DataFrame, html_col: str = "html", url_col: str = "url"
 ) -> DataFrame:
     """(src_url, pos, dst_url, anchor) — document-order anchor pairs."""
-    pairs = extract_anchors_udf(F.col(html_col), F.col(url_col))
+    pairs = page_udf(extract_anchors, ANCHORS_TYPE, with_url=True)(
+        F.col(html_col), F.col(url_col)
+    )
     return pages.select(
         F.col(url_col).alias("src_url"), F.posexplode(pairs).alias("pos", "a")
     ).select("src_url", "pos", F.col("a.url").alias("dst_url"), F.col("a.anchor").alias("anchor"))

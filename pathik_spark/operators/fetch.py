@@ -21,10 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pathik_spark.functions import urls as U
-from pathik_spark.functions.extract_udfs import (
-    make_extract_both_udf,
-    make_extract_text_udf,
-)
+from pathik_spark.functions.extract_udfs import make_extract_udf
 from pathik_spark.kernels.extract import FETCH_CAP
 
 STATUS_FETCHED = "fetched"
@@ -84,46 +81,16 @@ def extract_artifacts(
         U.filename_expr(F.col("url"), F.col("warc_ts"), "md").alias("filename_md"),
         U.user_agent_expr(F.col("url")).alias("user_agent"),
     ]
-    if with_links:
-        # fused UDF: one parse per page yields text (+ markdown only when
-        # requested) + hrefs — link discovery costs no second pass over
-        # the corpus, and content_type='html' skips the markdown renderer
-        if with_markdown:
-            from pathik_spark.functions.extract_udfs import make_extract_full_udf
-
-            full_udf = make_extract_full_udf(fetch_cap)
-            out = fetched.select(
-                F.col("*"), *common,
-                F.when(is_fetched, full_udf(F.col("html"), F.col("url"))).alias("_ext"),
-            )
-            return out.select(
-                "*",
-                F.col("_ext.text").alias("text"),
-                F.col("_ext.markdown").alias("markdown"),
-                F.col("_ext.links").alias("outlinks"),
-            ).drop("_ext")
-        from pathik_spark.functions.extract_udfs import make_extract_text_links_udf
-
-        tl_udf = make_extract_text_links_udf(fetch_cap)
-        out = fetched.select(
-            F.col("*"), *common,
-            F.when(is_fetched, tl_udf(F.col("html"), F.col("url"))).alias("_ext"),
-        )
-        return out.select(
-            "*",
-            F.col("_ext.text").alias("text"),
-            F.col("_ext.links").alias("outlinks"),
-        ).drop("_ext")
-    if with_markdown:
-        # fused UDF: one parse per page yields both text and markdown
-        both_udf = make_extract_both_udf(fetch_cap)
-        out = fetched.select(
-            F.col("*"), *common, F.when(is_fetched, both_udf(F.col("html"))).alias("_ext")
-        )
-        return out.select(
-            "*", F.col("_ext.text").alias("text"), F.col("_ext.markdown").alias("markdown")
-        ).drop("_ext")
-    extract_udf = make_extract_text_udf(fetch_cap)
+    # one UDF call per page: one parse yields text, plus markdown and
+    # hrefs only when asked for (content_type='html' skips the markdown
+    # renderer; link discovery costs no second pass over the corpus).
+    # The url column ships to Python only for links (relative-href base).
+    # Every field reads the same UDF expression, so the plan holds ONE
+    # ArrowEvalPython output that the fields project from.
+    parts = ("text",) + ("markdown",) * with_markdown + ("links",) * with_links
+    cols = [F.col("html")] + [F.col("url")] * with_links
+    ext = F.when(is_fetched, make_extract_udf(parts, fetch_cap)(*cols))
     return fetched.select(
-        F.col("*"), *common, F.when(is_fetched, extract_udf(F.col("html"))).alias("text")
+        F.col("*"), *common,
+        *[ext[p].alias("outlinks" if p == "links" else p) for p in parts],
     )

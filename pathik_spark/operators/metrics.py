@@ -148,6 +148,36 @@ def backoff_delays(
     return joined.select("host", nxt.cast("long").alias("crawl_delay_ms"))
 
 
+def backoff_update(
+    host_stats: DataFrame,
+    prev: tuple[DataFrame | None, DataFrame | None] = (None, None),
+    *,
+    base_budget: int,
+    min_budget: int = 1,
+    max_budget: int | None = None,
+    increase_step: int = 1,
+    err_threshold_bp: int = 2000,
+    base_delay_ms: int = 0,
+    max_delay_ms: int = 60_000,
+) -> tuple[DataFrame, DataFrame]:
+    """One per-host backoff state step: this round's ``host_stats`` plus
+    the previous (budgets, delays) pair -> the next pair, by
+    ``backoff_budgets`` and ``backoff_delays``. ``prev=(None, None)``
+    seeds the state from one round of evidence (a resume or restart).
+    Both outputs are localCheckpointed eagerly so the cross-round chains'
+    plans stay flat (host-count-sized tables)."""
+    budgets = backoff_budgets(
+        host_stats, prev[0], base_budget=base_budget, min_budget=min_budget,
+        max_budget=max_budget, increase_step=increase_step,
+        err_threshold_bp=err_threshold_bp,
+    ).localCheckpoint()
+    delays = backoff_delays(
+        host_stats, prev[1], base_delay_ms=base_delay_ms,
+        max_delay_ms=max_delay_ms, err_threshold_bp=err_threshold_bp,
+    ).localCheckpoint()
+    return budgets, delays
+
+
 def analyze_crawl(store, spark) -> DataFrame:
     """Post-run crawl report over a committed state store: one row per
     round joining the manifest stats (scheduled/fetched/.../seen_total)

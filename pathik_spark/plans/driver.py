@@ -37,7 +37,11 @@ from pathik_spark.config import CrawlConfig
 from pathik_spark.operators.discover import discover_links
 from pathik_spark.operators.fetch import extract_artifacts, fetch_join
 from pathik_spark.operators.frontier import prepare_frontier
-from pathik_spark.operators.metrics import host_metrics, partition_lineage
+from pathik_spark.operators.metrics import (
+    backoff_update,
+    host_metrics,
+    partition_lineage,
+)
 from pathik_spark.operators.robots import attach_robots, filter_disallowed
 from pathik_spark.operators.scheduler import schedule_round
 from pathik_spark.operators.seen import build_bloom_shards, seen_filter
@@ -404,42 +408,18 @@ class CrawlRun:
         _tick("artifacts_write")
         lineage = partition_lineage(arts, self.config.run_id, round_no)
 
-        def _update_backoff(
-            prev_budgets=self._backoff_budgets, prev_delays=self._backoff_delays
-        ):
+        def _update_backoff(prev=(self._backoff_budgets, self._backoff_delays)):
             # AIMD budget + exponential delay update for NEXT round's
             # scheduler (config docstring / operators/metrics). One
-            # committed-artifacts scan feeds both; eager localCheckpoint
-            # keeps the cross-round chains' plans flat (host-count-sized
-            # tables). Runs INSIDE the derived-writes pool so the three
-            # tiny jobs overlap the heavy writes instead of serializing
-            # on the round's critical path.
-            from pathik_spark.operators.metrics import (
-                backoff_budgets,
-                backoff_delays,
-            )
-
+            # committed-artifacts scan feeds both. Runs INSIDE the
+            # derived-writes pool so the three tiny jobs overlap the
+            # heavy writes instead of serializing on the round's
+            # critical path.
             host_stats = arts.groupBy("host").agg(
                 F.count("*").alias("n_urls"),
                 F.count(F.when(F.col("status") != "fetched", 1)).alias("n_errors"),
             ).localCheckpoint()
-            budgets = backoff_budgets(
-                host_stats,
-                prev_budgets,
-                base_budget=cfg.backoff_base_budget,
-                min_budget=cfg.backoff_min_budget,
-                max_budget=cfg.backoff_max_budget,
-                increase_step=cfg.backoff_step,
-                err_threshold_bp=cfg.backoff_threshold_bp,
-            ).localCheckpoint()
-            delays = backoff_delays(
-                host_stats,
-                prev_delays,
-                base_delay_ms=cfg.backoff_base_delay_ms,
-                max_delay_ms=cfg.backoff_max_delay_ms,
-                err_threshold_bp=cfg.backoff_threshold_bp,
-            ).localCheckpoint()
-            return budgets, delays
+            return self._next_backoff(host_stats, prev)
 
         # W3 retry semantics (crawler.go:173-224): missing rows re-enter
         # with attempt+1 until max_attempts; exhausted rows become seen.
@@ -697,6 +677,16 @@ class CrawlRun:
         return base
 
     # -- multi-round with resume --------------------------------------------
+    def _next_backoff(self, host_stats: DataFrame, prev=(None, None)):
+        """(budgets, delays) for the next round (metrics.backoff_update)."""
+        c = self.config
+        return backoff_update(
+            host_stats, prev, base_budget=c.backoff_base_budget,
+            min_budget=c.backoff_min_budget, max_budget=c.backoff_max_budget,
+            increase_step=c.backoff_step, err_threshold_bp=c.backoff_threshold_bp,
+            base_delay_ms=c.backoff_base_delay_ms, max_delay_ms=c.backoff_max_delay_ms,
+        )
+
     def run(self, seeds: DataFrame, n_rounds: int | None = None, resume: bool = True) -> list[RoundStats]:
         n_rounds = n_rounds or self.config.n_rounds
         start = 0
@@ -714,28 +704,10 @@ class CrawlRun:
                     # one round of evidence, not the in-session AIMD
                     # history (config docstring) — budgets restart from
                     # the last committed round's host_metrics
-                    from pathik_spark.operators.metrics import backoff_budgets
-
-                    cfg = self.config
                     hm = self.store.read_table(last, "host_metrics")
-                    self._backoff_budgets = backoff_budgets(
-                        hm.select("host", "n_urls", "n_errors"),
-                        None,
-                        base_budget=cfg.backoff_base_budget,
-                        min_budget=cfg.backoff_min_budget,
-                        max_budget=cfg.backoff_max_budget,
-                        increase_step=cfg.backoff_step,
-                        err_threshold_bp=cfg.backoff_threshold_bp,
-                    ).localCheckpoint()
-                    from pathik_spark.operators.metrics import backoff_delays
-
-                    self._backoff_delays = backoff_delays(
-                        hm.select("host", "n_urls", "n_errors"),
-                        None,
-                        base_delay_ms=cfg.backoff_base_delay_ms,
-                        max_delay_ms=cfg.backoff_max_delay_ms,
-                        err_threshold_bp=cfg.backoff_threshold_bp,
-                    ).localCheckpoint()
+                    self._backoff_budgets, self._backoff_delays = self._next_backoff(
+                        hm.select("host", "n_urls", "n_errors")
+                    )
         if resume and start > 0:
             prev = self.store.read_manifest(start - 1)
             seen_hint = int((prev or {}).get("stats", {}).get("seen_total", 0))

@@ -27,6 +27,7 @@ from pathik_spark.functions import urls as U
 from pathik_spark.kernels.extract import SAVE_CAP
 
 CONTENT_TYPES = ("html", "markdown", "both")
+COMPRESSIONS = ("gzip", "snappy", "lz4", "zstd")  # schema.py:210-214
 
 
 def local_file_rows(artifacts: DataFrame, save_cap: int = SAVE_CAP) -> DataFrame:
@@ -198,8 +199,6 @@ def kafka_writer_options(
     buffer; kafka_consumer_direct.py:86-120 SASL user/pass + TLS).
     SASL PLAIN over TLS when credentials are given — the same auth
     matrix the reference's clients speak."""
-    from pathik_spark.config import COMPRESSIONS
-
     opts = {"kafka.bootstrap.servers": brokers, "topic": topic}
     if username is not None:
         mech = "SASL_SSL" if use_tls else "SASL_PLAINTEXT"

@@ -176,7 +176,7 @@ def make_adaptive_batch_processor(
     from pyspark.sql import Window
 
     from pathik_spark.operators.delta import recrawl_filter_adaptive
-    from pathik_spark.operators.metrics import backoff_budgets, backoff_delays
+    from pathik_spark.operators.metrics import backoff_update
 
     caps_static = None
     if robots is not None and "max_per_round" in robots.columns:
@@ -187,6 +187,11 @@ def make_adaptive_batch_processor(
         )
 
     state: dict = {"budgets": None, "delays": None, "admitted": []}
+    aimd = dict(
+        base_budget=base_budget, min_budget=min_budget, max_budget=max_budget,
+        increase_step=step, err_threshold_bp=threshold_bp,
+        base_delay_ms=base_delay_ms, max_delay_ms=max_delay_ms,
+    )
     # restart semantics mirror the batch driver (config.py
     # adaptive_backoff docstring): a fresh processor over an out_dir
     # with committed batches re-seeds the AIMD state from the LAST
@@ -203,15 +208,7 @@ def make_adaptive_batch_processor(
                 F.when(~F.col("status").isin("fetched", "revalidated"), 1)
             ).alias("n_errors"),
         ).localCheckpoint()
-        state["budgets"] = backoff_budgets(
-            stats0, None, base_budget=base_budget, min_budget=min_budget,
-            max_budget=max_budget, increase_step=step,
-            err_threshold_bp=threshold_bp,
-        ).localCheckpoint()
-        state["delays"] = backoff_delays(
-            stats0, None, base_delay_ms=base_delay_ms,
-            max_delay_ms=max_delay_ms, err_threshold_bp=threshold_bp,
-        ).localCheckpoint()
+        state["budgets"], state["delays"] = backoff_update(stats0, **aimd)
     pend_path = _os.path.join(pending_dir, "pending.parquet")
     seen_path = _os.path.join(seen_dir, "seen.parquet") if seen_dir else None
     cache_meta_path = (
@@ -341,15 +338,9 @@ def make_adaptive_batch_processor(
                 F.when(~F.col("status").isin("fetched", "revalidated"), 1)
             ).alias("n_errors"),
         ).localCheckpoint()
-        state["budgets"] = backoff_budgets(
-            host_stats, state["budgets"], base_budget=base_budget,
-            min_budget=min_budget, max_budget=max_budget,
-            increase_step=step, err_threshold_bp=threshold_bp,
-        ).localCheckpoint()
-        state["delays"] = backoff_delays(
-            host_stats, state["delays"], base_delay_ms=base_delay_ms,
-            max_delay_ms=max_delay_ms, err_threshold_bp=threshold_bp,
-        ).localCheckpoint()
+        state["budgets"], state["delays"] = backoff_update(
+            host_stats, (state["budgets"], state["delays"]), **aimd
+        )
         state["admitted"].append(
             {
                 r["host"]: r["n"]
@@ -362,8 +353,10 @@ def make_adaptive_batch_processor(
             admitted.select(
                 "url_hash", "url", F.col("event_ts").alias("seen_ts")
             ).write.mode("append").parquet(seen_path)
-        if ttls_b is not None:
-            # maintain a latest-per-url SNAPSHOT, not an append log:
+        if ttls_b is not None and not ttls_b.isEmpty():
+            # (a batch that landed no payloads leaves the snapshot as it
+            # is: no O(live urls) read + rewrite for an idle batch)
+            # Maintain a latest-per-url SNAPSHOT, not an append log:
             # (a) per-batch admission cost stays O(live urls) instead
             # of O(stream history); (b) read-merge-overwrite is
             # replay-idempotent under foreachBatch's at-least-once

@@ -452,6 +452,9 @@ def test_cache_meta_snapshot_replay_idempotent(spark, tmp_path):
     process(batch, 0)  # replayed batch, same batch_id
     assert sorted(map(tuple, spark.read.parquet(cm_path).collect())) == first
     # a later batch whose urls are all TTL-blocked admits nothing and
-    # must not touch the snapshot
+    # must not touch the snapshot: same rows, and the part files are not
+    # rewritten either
+    parts = sorted(f for f in os.listdir(cm_path) if f.startswith("part-"))
     process(batch, 1)
     assert sorted(map(tuple, spark.read.parquet(cm_path).collect())) == first
+    assert sorted(f for f in os.listdir(cm_path) if f.startswith("part-")) == parts

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pathik_spark.fixtures import CorpusSpec, corpus_to_spark, gen_corpus
-from pathik_spark.kernels.extract import extract_both, extract_full, extract_links
+from pathik_spark.kernels.extract import extract_both, extract_links, extract_page
 
 
 def test_extract_links_covers_fixture_outlinks():
@@ -46,13 +46,13 @@ def test_extract_links_skips_site_chrome():
     assert extract_links(html) == ["https://h/content"]
 
 
-def test_extract_full_matches_both():
+def test_extract_page_links_arm_matches_both():
     spec = CorpusSpec(200, 40)
     for pid in (1, 16, 17, 55):  # incl. malformed + non-utf8 strata
         row, _ = spec.page_row(pid)
-        t, m, _links = extract_full(row["html"], row["url"])
-        tb, mb = extract_both(row["html"])
-        assert t == tb and m == mb, pid
+        t, m, links = extract_page(row["html"], row["url"], parts=("text", "markdown", "links"))
+        assert (t, m) == extract_both(row["html"]), pid
+        assert links == extract_links(row["html"], row["url"]), pid
 
 
 @pytest.fixture(scope="module")

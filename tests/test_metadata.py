@@ -33,7 +33,7 @@ def test_metadata_og_fallback_and_missing():
 
 
 def test_metadata_udf_struct(spark):
-    from pathik_spark.functions.extract_udfs import extract_metadata_udf
+    from pathik_spark.functions.extract_udfs import METADATA_TYPE, page_udf
 
     df = spark.createDataFrame(
         [(1, bytearray(b"<title>T</title><h1>H</h1>")), (2, None)],
@@ -41,7 +41,7 @@ def test_metadata_udf_struct(spark):
     )
     rows = {
         r["id"]: r
-        for r in df.select("id", extract_metadata_udf(F.col("html")).alias("m"))
+        for r in df.select("id", page_udf(extract_metadata, METADATA_TYPE)(F.col("html")).alias("m"))
         .select("id", "m.*")
         .collect()
     }

@@ -129,8 +129,6 @@ def test_config_validation():
         CrawlConfig(content_type="xml").validate()
     with pytest.raises(ValueError):
         CrawlConfig(limit_per_round=0).validate()
-    with pytest.raises(ValueError):
-        CrawlConfig(kafka_compression="brotli").validate()
 
 
 def test_streaming_smoke(spark, corpus, tmp_path):
