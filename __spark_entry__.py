@@ -224,8 +224,7 @@ def _q_crawl_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir=tempfile.mkdtemp(prefix="pathik_rel_"),
         config=CrawlConfig(
             run_id="rel", n_rounds=2, max_attempts=CRAWL_REL_MAX_ATTEMPTS,
-            collect_stats=False, content_type="html",
-            pages_buckets=8,
+            content_type="html", pages_buckets=8,
         ),
     )
     run.run(spark.sql(seeds_sql(SPARK)), n_rounds=2)

@@ -38,9 +38,6 @@ class CrawlConfig:
     # build is skipped and the exact anti-join carries the round alone.
     # 256 MB ≈ 2.1e8 seen URLs.
     prefilter_max_bytes: int = 256 << 20
-    # per-round stats beyond the core artifact counts cost extra jobs;
-    # turn off for throughput runs (manifest then records -1 for them)
-    collect_stats: bool = True
     # bucket count for the prepared pages table: it sets the LAYOUT,
     # fixed per run and DECOUPLED from cluster size (the layout must not
     # change when executors are added); size it to the corpus: ~128-512

@@ -1,7 +1,9 @@
 """Vectorized Arrow UDFs for charset sniffing / legacy-page decoding
 (kernels/charset.py — see that module for the WHATWG precedence and why
 this is a separate, opt-in front-end rather than a change to the
-fixture-pinned UTF-8 kernel).
+fixture-pinned UTF-8 kernel). Both are ``extract_udfs.page_udf`` over
+the html and content_type columns; a null content_type reaches the
+kernel as '', which it treats like no header.
 
 Typical use: re-encode a legacy corpus to clean UTF-8 bytes ONCE at
 ingest, then run the unchanged byte-identical extraction pipeline:
@@ -13,51 +15,15 @@ ingest, then run the unchanged byte-identical extraction pipeline:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pathik_spark.functions.extract_udfs import page_udf
 from pathik_spark.kernels import charset as C
 
 
 def make_sniff_charset_udf():
     """(html binary, content_type string|null) -> codec name."""
-
-    @F.pandas_udf(T.StringType())
-    def sniff_charset_udf(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        for html, ctype in it:
-            yield pd.Series(
-                [
-                    C.sniff_charset(b, t if isinstance(t, str) else None)
-                    for b, t in zip(html, ctype)
-                ]
-            )
-
-    return sniff_charset_udf
-
-
-def make_decode_auto_udf(fetch_cap: int | None = None):
-    """(html binary, content_type string|null) -> decoded text."""
-
-    @F.pandas_udf(T.StringType())
-    def decode_auto_udf(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        for html, ctype in it:
-            yield pd.Series(
-                [
-                    C.decode_html_auto(
-                        b, t if isinstance(t, str) else None, fetch_cap
-                    )
-                    for b, t in zip(html, ctype)
-                ]
-            )
-
-    return decode_auto_udf
+    return page_udf(C.sniff_charset, T.StringType(), with_url=True)
 
 
 def make_transcode_utf8_udf(fetch_cap: int | None = None):
@@ -66,21 +32,7 @@ def make_transcode_utf8_udf(fetch_cap: int | None = None):
     kernel process legacy pages correctly (already-UTF-8 pages
     round-trip unchanged minus a BOM)."""
 
-    @F.pandas_udf(T.BinaryType())
-    def transcode_utf8_udf(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        for html, ctype in it:
-            yield pd.Series(
-                [
-                    None
-                    if b is None
-                    else C.decode_html_auto(
-                        b, t if isinstance(t, str) else None, fetch_cap
-                    ).encode("utf-8")
-                    for b, t in zip(html, ctype)
-                ],
-                dtype=object,
-            )
+    def transcode(html: bytes | None, content_type: str) -> bytes | None:
+        return None if html is None else C.decode_html_auto(html, content_type, fetch_cap).encode()
 
-    return transcode_utf8_udf
+    return page_udf(transcode, T.BinaryType(), with_url=True)

@@ -45,11 +45,12 @@ ANCHORS_TYPE = T.ArrayType(
 def page_udf(kernel: Callable, return_type: T.DataType, with_url: bool = False):
     """Arrow-batched pandas UDF applying ``kernel`` to every page.
 
-    ``kernel(html)`` — or ``kernel(html, url)`` when ``with_url``, the
-    url null-coalesced to '' — returns one row's value: a tuple in field
+    ``kernel(html)`` — or ``kernel(html, s)`` when ``with_url``, for a
+    second string column ``s`` (a page url, a content type)
+    null-coalesced to '' — returns one row's value: a tuple in field
     order for a struct ``return_type``, a plain value otherwise. PySpark
-    reads the UDF's arity from its type hints, so the html-only and the
-    html+url bodies are written out side by side."""
+    reads the UDF's arity from its type hints, so the one- and
+    two-column bodies are written out side by side."""
     if isinstance(return_type, T.StructType):
         names = return_type.fieldNames()
 

@@ -11,7 +11,8 @@ Per round:
              -> extract text/markdown + derive filenames (X1-X7, F6-F8)
              -> artifacts + metrics + lineage written (A1/A3/B6)
              -> retries (W3) + discovered links (§2.7) -> next frontier
-             -> snapshot commit (B5)
+             -> snapshot commit (B5) of the tables and the round stats,
+                counted by Observations on those same writes (A1/A4)
 
 Spark has no native iteration, so the loop is driver-side Python; each
 round is one declarative DataFrame plan that Catalyst optimizes whole
@@ -28,7 +29,7 @@ as parity mode (config.global_period_ms) and OFF at scale.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,22 +50,6 @@ from pathik_spark.sources.tables import SnapshotStore, make_store
 
 FRONTIER_COLS = ["url", "seq", "priority", "attempt"]
 SEEN_COLS = ["url_hash", "host_hash", "url"]
-
-
-def _parquet_row_count(spark: SparkSession, path: str) -> int:
-    """Row count from local parquet footers — driver-side metadata read,
-    no Spark job (used for the per-round emptiness check). A non-local
-    state_dir (object store) is invisible to glob, so an empty match
-    falls back to a Spark-side count instead of silently reporting 0
-    (which would terminate the crawl loop after one round)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    files = _glob.glob(os.path.join(path, "*.parquet"))
-    if not files:
-        return spark.read.parquet(path).count()
-    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 # The fetch+extract coalesce was measured on crawlbench only: 4 task
@@ -301,6 +286,9 @@ class CrawlRun:
         seen_size_hint: int = 0,
         finalize_prev=None,
     ) -> tuple[DataFrame, DataFrame, RoundStats, "object"]:
+        """One round. ``seen_size_hint`` is the row count of ``seen`` (the
+        previous round's seen_total): it picks the seen filter, and this
+        round's seen_total adds the rows the round consumed to it."""
         cfg = self.config
         spark = self.spark
         import time as _time
@@ -382,229 +370,228 @@ class CrawlRun:
             with_links=cfg.discover_from_html,
         ).withColumn("bytes_fetched", F.coalesce(F.length("html"), F.lit(0)))
 
-        # the deferred slice of next_frontier depends only on the (cached)
-        # selected set — write it concurrently with the heavy artifacts job
-        # below; the retry/discovered slices append after artifacts lands.
+        # ONE pool runs every write of the round as a concurrent Spark job,
+        # sized to the seven futures it can receive so none waits for a
+        # thread. The deferred slice of next_frontier depends only on the
+        # (cached) selected set: submitted first, it overlaps the heavy
+        # artifacts job; the retry/discovered slices append after it.
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import Observation
 
         nf_path = os.path.join(self.store._round_dir(round_no), "next_frontier.parquet")
         os.makedirs(self.store._round_dir(round_no), exist_ok=True)
-        deferred_part = deferred.select(*FRONTIER_COLS).withColumn("src", F.lit("deferred"))
-        overlap_pool = ThreadPoolExecutor(max_workers=1)
-        f_deferred = overlap_pool.submit(
-            lambda: deferred_part.write.mode("overwrite").parquet(nf_path)
-        )
+        # round stats ride the writes as Observations, each read only after
+        # its write returned (get blocks on an action that never ran)
+        obs_arts, obs_deferred, obs_rest = Observation(), Observation(), Observation()
+        deferred_part = deferred.select(*FRONTIER_COLS).withColumn(
+            "src", F.lit("deferred")
+        ).observe(obs_deferred, F.count(F.lit(1)).alias("n"))
+        pool = ThreadPoolExecutor(max_workers=7)
+        try:
+            f_deferred = pool.submit(
+                lambda: deferred_part.write.mode("overwrite").parquet(nf_path)
+            )
 
-        # ONE pass through fetch join + extraction UDFs: write the
-        # artifacts snapshot, then every consumer (incl. lineage) scans the
-        # columnar file.
-        if cfg.honor_meta_robots:
-            # REP HTML arm (config docstring): parse the directives while
-            # the html column still exists — scan-local, same pass
-            from pathik_spark.operators.robots import meta_robots_directives
+            # ONE pass through fetch join + extraction UDFs: write the
+            # artifacts snapshot, then every consumer (incl. lineage)
+            # scans the columnar file.
+            if cfg.honor_meta_robots:
+                # REP HTML arm (config docstring): parse the directives
+                # while the html column still exists — scan-local, same pass
+                from pathik_spark.operators.robots import meta_robots_directives
 
-            artifacts_plan = meta_robots_directives(artifacts_plan)
-        arts = self.store.write_table(round_no, "artifacts", artifacts_plan.drop("html"))
-        _tick("artifacts_write")
-        lineage = partition_lineage(arts, self.config.run_id, round_no)
+                artifacts_plan = meta_robots_directives(artifacts_plan)
+            arts = self.store.write_table(round_no, "artifacts", artifacts_plan.drop("html"))
+            _tick("artifacts_write")
+            lineage = partition_lineage(arts, self.config.run_id, round_no)
 
-        def _update_backoff(prev=(self._backoff_budgets, self._backoff_delays)):
-            # AIMD budget + exponential delay update for NEXT round's
-            # scheduler (config docstring / operators/metrics). One
-            # committed-artifacts scan feeds both. Runs INSIDE the
-            # derived-writes pool so the three tiny jobs overlap the
-            # heavy writes instead of serializing on the round's
-            # critical path.
-            host_stats = arts.groupBy("host").agg(
-                F.count("*").alias("n_urls"),
-                F.count(F.when(F.col("status") != "fetched", 1)).alias("n_errors"),
-            ).localCheckpoint()
-            return self._next_backoff(host_stats, prev)
+            def _update_backoff(prev=(self._backoff_budgets, self._backoff_delays)):
+                # AIMD budget + exponential delay update for NEXT round's
+                # scheduler (config docstring / operators/metrics). One
+                # committed-artifacts scan feeds both. Runs INSIDE the
+                # pool so the three tiny jobs overlap the heavy writes
+                # instead of serializing on the round's critical path.
+                host_stats = arts.groupBy("host").agg(
+                    F.count("*").alias("n_urls"),
+                    F.count(F.when(F.col("status") != "fetched", 1)).alias("n_errors"),
+                ).localCheckpoint()
+                return self._next_backoff(host_stats, prev)
 
-        # W3 retry semantics (crawler.go:173-224): missing rows re-enter
-        # with attempt+1 until max_attempts; exhausted rows become seen.
-        retry = arts.filter(
-            (F.col("status") == "missing") & (F.col("attempt") + 1 < cfg.max_attempts)
-        ).select("url", "seq", "priority", (F.col("attempt") + 1).alias("attempt"))
-        # The seen table is an append-only DELTA log: each round commits only
-        # the URLs it consumed (fetched or retry-exhausted). Deltas are
-        # disjoint by construction — consumed rows passed this round's
-        # anti-join and a retried URL is consumed exactly once — so the
-        # cumulative set is a plain union of scans: no per-round rewrite of
-        # the whole seen set (O(|seen|) per round kills a 10^10 crawl) and
-        # no distinct() shuffle. Every seen_compact_every rounds the union
-        # is compacted into one table to bound the scan fan-in.
-        # round stats ride the seen-delta write as an Observation on the
-        # artifacts scan (pre-filter) — no dedicated aggregation job
-        from pyspark.sql import Observation
+            # W3 retry semantics (crawler.go:173-224): missing rows re-enter
+            # with attempt+1 until max_attempts; exhausted rows become seen.
+            retry = arts.filter(
+                (F.col("status") == "missing") & (F.col("attempt") + 1 < cfg.max_attempts)
+            ).select("url", "seq", "priority", (F.col("attempt") + 1).alias("attempt"))
+            # The seen table is an append-only DELTA log: each round commits
+            # only the URLs it consumed (fetched or retry-exhausted). Deltas
+            # are disjoint by construction — consumed rows passed this
+            # round's anti-join and a retried URL is consumed exactly once —
+            # so the cumulative set is a plain union of scans: no per-round
+            # rewrite of the whole seen set (O(|seen|) per round kills a
+            # 10^10 crawl) and no distinct() shuffle, and its size is the
+            # previous size plus this round's consumed count. Every
+            # seen_compact_every rounds the union is compacted into one
+            # table to bound the scan fan-in.
+            is_consumed = (F.col("status") == "fetched") | (
+                F.col("attempt") + 1 >= cfg.max_attempts
+            )
+            consumed = arts.observe(
+                obs_arts,
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(F.col("status") == "fetched", 1)).alias("f"),
+                F.count(F.when(is_consumed, 1)).alias("c"),
+            ).filter(is_consumed).select("url_hash", "host_hash", "url")
 
-        obs = Observation()
-        arts_obs = arts.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("status") == "fetched", 1)).alias("f"),
-        )
-        consumed = arts_obs.filter(
-            (F.col("status") == "fetched") | (F.col("attempt") + 1 >= cfg.max_attempts)
-        ).select("url_hash", "host_hash", "url")
+            def _frontier_rest() -> DataFrame:
+                """retry ∪ discovered. Built lazily INSIDE the frontier-append
+                future: discover's rank needs an eager count job, which then
+                overlaps the seen/metrics/lineage writes instead of blocking
+                the driver thread."""
+                nf = retry.select(*FRONTIER_COLS).withColumn("src", F.lit("retry"))
+                # REP nofollow: pages carrying the directive contribute no
+                # outlinks to the next frontier (column exists only when
+                # cfg.honor_meta_robots wrote it)
+                link_src = arts
+                if "nofollow" in arts.columns:
+                    link_src = arts.filter(F.col("nofollow") == 0)
+                # discovered rows take a per-round disjoint seq range: always
+                # after every seed/deferred seq (FIFO: discoveries queue
+                # behind the original frontier) and unique without a
+                # max(seq) job
+                seq_base = (round_no + 1) * 1_000_000_000_000
+                if cfg.discover_from_html:
+                    from pathik_spark.operators.discover import discover_from_outlinks
 
-        def _frontier_rest() -> DataFrame:
-            """retry ∪ discovered. Built lazily INSIDE the frontier-append
-            future: discover's rank needs an eager count job, which then
-            overlaps the seen/metrics/lineage writes instead of blocking
-            the driver thread."""
-            nf = retry.select(*FRONTIER_COLS).withColumn("src", F.lit("retry"))
-            # REP nofollow: pages carrying the directive contribute no
-            # outlinks to the next frontier (column exists only when
-            # cfg.honor_meta_robots wrote it)
-            link_src = arts
-            if "nofollow" in arts.columns:
-                link_src = arts.filter(F.col("nofollow") == 0)
-            if cfg.discover_from_html:
-                from pathik_spark.operators.discover import discover_from_outlinks
-
-                discovered = discover_from_outlinks(
-                    link_src, seq_base=(round_no + 1) * 1_000_000_000_000, persisted=persisted
-                )
+                    discovered = discover_from_outlinks(
+                        link_src, seq_base=seq_base, persisted=persisted
+                    )
+                elif self.links is not None:
+                    discovered = discover_links(
+                        self._prepared_links(), link_src.filter(F.col("status") == "fetched"),
+                        seq_base=seq_base, prepared=True, persisted=persisted,
+                    )
+                else:
+                    return nf
                 return nf.unionByName(
                     discovered.withColumn("attempt", F.lit(0))
                     .select(*FRONTIER_COLS)
                     .withColumn("src", F.lit("discovered"))
                 )
-            if self.links is not None:
-                # discovered rows take a per-round disjoint seq range:
-                # always after every seed/deferred seq (FIFO: discoveries
-                # queue behind the original frontier) and unique without a
-                # max(seq) job
-                seq_base = (round_no + 1) * 1_000_000_000_000
-                fetched_only = link_src.filter(F.col("status") == "fetched")
-                discovered = discover_links(
-                    self._prepared_links(), fetched_only, seq_base=seq_base,
-                    prepared=True, persisted=persisted,
+
+            def _append_frontier_rest():
+                rest = _frontier_rest().observe(
+                    obs_rest,
+                    F.count(F.when(F.col("src") == "retry", 1)).alias("retried"),
+                    F.count(F.when(F.col("src") == "discovered", 1)).alias("discovered"),
                 )
-                nf = nf.unionByName(
-                    discovered.withColumn("attempt", F.lit(0))
-                    .select(*FRONTIER_COLS)
-                    .withColumn("src", F.lit("discovered"))
-                )
-            return nf
+                f_deferred.result()  # deferred slice finished (overlapped with artifacts)
+                rest.write.mode("append").parquet(nf_path)
+                return self.spark.read.parquet(nf_path)
 
-        # the derived tables all scan the committed artifacts parquet and
-        # are mutually independent — submit them as concurrent Spark jobs
-        # (threads share the context; the scheduler interleaves their
-        # tasks) so their fixed per-job latency overlaps instead of
-        # summing. This is the local-mode analogue of a real cluster
-        # keeping its executors busy across small stages.
-        def _append_frontier_rest():
-            next_frontier = _frontier_rest()
-            f_deferred.result()  # deferred slice finished (overlapped with artifacts)
-            next_frontier.write.mode("append").parquet(nf_path)
-            return self.spark.read.parquet(nf_path)
+            # the derived tables all scan the committed artifacts parquet
+            # and are mutually independent: their fixed per-job latency
+            # overlaps instead of summing. This is the local-mode analogue
+            # of a real cluster keeping its executors busy across small
+            # stages.
+            f_hm = pool.submit(
+                self.store.write_table, round_no, "host_metrics",
+                host_metrics(arts, self.config.run_id, round_no),
+            )
+            f_lin = pool.submit(self.store.write_table, round_no, "lineage", lineage)
+            f_seen = pool.submit(self.store.write_table, round_no, "seen", consumed)
+            f_front = pool.submit(_append_frontier_rest)
+            f_backoff = pool.submit(_update_backoff) if cfg.adaptive_backoff else None
 
-        pool = ThreadPoolExecutor(max_workers=5)
-        f_hm = pool.submit(
-            self.store.write_table, round_no, "host_metrics",
-            host_metrics(arts, self.config.run_id, round_no),
-        )
-        f_lin = pool.submit(self.store.write_table, round_no, "lineage", lineage)
-        f_seen = pool.submit(self.store.write_table, round_no, "seen", consumed)
-        f_front = pool.submit(_append_frontier_rest)
-        f_backoff = pool.submit(_update_backoff) if cfg.adaptive_backoff else None
+            def _update_dust():
+                # mine THIS round's artifacts at GROUP granularity (one row
+                # per (host, param, residual-group) that actually tested the
+                # param, i.e. held >= 2 distinct URLs). Group-level merge
+                # makes the cross-round evidence ORDER-INDEPENDENT — a
+                # counterexample group vetoes whether it is observed before
+                # or after the collapsing groups — and counts DISTINCT
+                # groups toward min_groups (a single collapsing group
+                # refetched N rounds is still one group, not N). Collected
+                # rows are bounded by tested groups (value-varying params
+                # with co-residual URL pairs), far below the URL count.
+                from pathik_spark.operators.dust import url_param_evidence
 
-        def _update_dust():
-            # mine THIS round's artifacts at GROUP granularity (one row
-            # per (host, param, residual-group) that actually tested the
-            # param, i.e. held >= 2 distinct URLs). Group-level merge
-            # makes the cross-round evidence ORDER-INDEPENDENT — a
-            # counterexample group vetoes whether it is observed before
-            # or after the collapsing groups — and counts DISTINCT
-            # groups toward min_groups (a single collapsing group
-            # refetched N rounds is still one group, not N). Collected
-            # rows are bounded by tested groups (value-varying params
-            # with co-residual URL pairs), far below the URL count.
-            from pathik_spark.operators.dust import url_param_evidence
-
-            ev = url_param_evidence(
-                arts.filter(F.col("status") == "fetched").select(
-                    "host", "url",
-                    F.md5(F.coalesce(F.col("text"), F.lit(""))).alias(
-                        "content_hash"
+                ev = url_param_evidence(
+                    arts.filter(F.col("status") == "fetched").select(
+                        "host", "url",
+                        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias(
+                            "content_hash"
+                        ),
                     ),
-                ),
-            ).filter(F.col("n_urls") >= 2)
-            return [
-                (
-                    r["host"], r["param"], r["group_key"],
-                    r["n_contents"] == 1,
-                )
-                for r in ev.select(
-                    "host", "param",
-                    F.xxhash64("residual_key").alias("group_key"),
-                    "n_contents",
-                ).collect()
-            ]
+                ).filter(F.col("n_urls") >= 2)
+                return [
+                    (
+                        r["host"], r["param"], r["group_key"],
+                        r["n_contents"] == 1,
+                    )
+                    for r in ev.select(
+                        "host", "param",
+                        F.xxhash64("residual_key").alias("group_key"),
+                        "n_contents",
+                    ).collect()
+                ]
 
-        f_dust = pool.submit(_update_dust) if cfg.learn_dust else None
-        # only the round-(k+1) inputs are waited on here; host_metrics and
-        # lineage (off the critical path) keep running and are joined by
-        # finalize(), which the NEXT round calls just before its own commit
-        # — so their job latency overlaps the next round's heavy compute.
-        seen_delta = f_seen.result()
-        frontier_out = f_front.result()
-        if f_backoff is not None:
-            # next round's scheduler input — must land before run_round
-            # returns, but its three tiny jobs just overlapped the writes
-            self._backoff_budgets, self._backoff_delays = f_backoff.result()
-        if f_dust is not None:
-            # merge per-GROUP: once any round shows a group serving two
-            # contents for the same param, that group stays a
-            # counterexample (AND-fold); rules recompute from distinct
-            # groups, so they both form and dissolve as evidence
-            # accumulates, in any observation order
-            for host, param, group_key, collapsed in f_dust.result():
-                groups = self._dust_evidence.setdefault((host, param), {})
-                groups[group_key] = groups.get(group_key, True) and collapsed
-            self._dust_rules = {
-                key
-                for key, groups in self._dust_evidence.items()
-                if len(groups) >= cfg.dust_min_groups
-                and all(groups.values())
-            }
-        art_counts = obs.get  # filled by the seen-delta write's action
-        overlap_pool.shutdown(wait=False)
-        _tick("derived_writes")
+            f_dust = pool.submit(_update_dust) if cfg.learn_dust else None
+            # only the round-(k+1) inputs are waited on here; host_metrics
+            # and lineage (off the critical path) keep running and are
+            # joined by finalize(), which the NEXT round calls just before
+            # its own commit — so their job latency overlaps the next
+            # round's heavy compute.
+            seen_delta = f_seen.result()
+            frontier_out = f_front.result()  # after f_deferred, inside it
+            arts_n, rest_n = obs_arts.get, obs_rest.get
+            deferred_n = obs_deferred.get["n"]
+            if f_backoff is not None:
+                # next round's scheduler input — must land before run_round
+                # returns, but its three tiny jobs just overlapped the writes
+                self._backoff_budgets, self._backoff_delays = f_backoff.result()
+            if f_dust is not None:
+                # merge per-GROUP: once any round shows a group serving two
+                # contents for the same param, that group stays a
+                # counterexample (AND-fold); rules recompute from distinct
+                # groups, so they both form and dissolve as evidence
+                # accumulates, in any observation order
+                for host, param, group_key, collapsed in f_dust.result():
+                    groups = self._dust_evidence.setdefault((host, param), {})
+                    groups[group_key] = groups.get(group_key, True) and collapsed
+                self._dust_rules = {
+                    key
+                    for key, groups in self._dust_evidence.items()
+                    if len(groups) >= cfg.dust_min_groups
+                    and all(groups.values())
+                }
+            _tick("derived_writes")
 
-        # cumulative seen = union of delta scans; compact periodically so
-        # the union fan-in (and resume manifest chain) stays bounded
-        seen_out = (
-            seen_delta
-            if seen is None
-            else seen.select(*SEEN_COLS).unionByName(seen_delta.select(*SEEN_COLS))
-        )
-        compacted = cfg.seen_compact_every and (round_no + 1) % cfg.seen_compact_every == 0
-        if compacted:
-            seen_out = self._write_seen_compact(round_no, seen_out)
-        if cfg.collect_stats:
-            nf_counts = {
-                r["src"]: r["n"]
-                for r in frontier_out.groupBy("src").agg(F.count("*").alias("n")).collect()
-            }
-            seen_total = seen_out.count()
-        else:
-            nf_counts = {}
-            seen_total = seen_size_hint + art_counts["f"]  # upper-bound estimate
-        # next-frontier emptiness from parquet footers (driver-side, no job)
-        nf_rows = _parquet_row_count(spark, nf_path)
+            # cumulative seen = union of delta scans; compact periodically
+            # so the union fan-in (and resume manifest chain) stays bounded
+            seen_out = (
+                seen_delta
+                if seen is None
+                else seen.select(*SEEN_COLS).unionByName(seen_delta.select(*SEEN_COLS))
+            )
+            compacted = cfg.seen_compact_every and (round_no + 1) % cfg.seen_compact_every == 0
+            if compacted:
+                seen_out = self._write_seen_compact(round_no, seen_out)
+        except BaseException:
+            # no write of a failed round keeps running: a resume rewrites
+            # the same round directory
+            pool.shutdown(wait=True, cancel_futures=True)
+            raise
         stats = RoundStats(
             round=round_no,
-            scheduled=art_counts["n"],
-            fetched=art_counts["f"],
-            missing=art_counts["n"] - art_counts["f"],
-            deferred=nf_counts.get("deferred", 0),
-            retried=nf_counts.get("retry", 0),
-            discovered=nf_counts.get("discovered", 0),
-            seen_total=seen_total,
-            extras={"timers": _timers, "next_frontier_rows": nf_rows},
+            scheduled=arts_n["n"],
+            fetched=arts_n["f"],
+            missing=arts_n["n"] - arts_n["f"],
+            deferred=deferred_n,
+            retried=rest_n["retried"],
+            discovered=rest_n["discovered"],
+            seen_total=seen_size_hint + arts_n["c"],
+            extras={"timers": _timers},
         )
         for df in persisted:
             df.unpersist()
@@ -622,9 +609,7 @@ class CrawlRun:
                 round_no,
                 ["artifacts", "host_metrics", "lineage", "seen", "next_frontier"]
                 + (["seen_compact"] if compacted else []),
-                stats={k: getattr(stats, k) for k in (
-                    "scheduled", "fetched", "missing", "deferred", "retried", "discovered", "seen_total"
-                )},
+                stats={k: v for k, v in asdict(stats).items() if k not in ("round", "extras")},
             )
 
         if finalize_prev is not None:
@@ -694,12 +679,17 @@ class CrawlRun:
             "url", F.col("seq").cast("long"), F.col("priority").cast("int")
         ).withColumn("attempt", F.lit(0))
         seen: DataFrame | None = None
+        seen_hint = 0
         if resume:
             last = self.store.latest_complete_round()
             if last is not None:
                 start = last + 1
                 frontier = self.store.read_table(last, "next_frontier")
                 seen = self._read_seen_upto(last)
+                # each round adds its consumed count to the manifest's
+                # seen_total; a manifest without one costs one count here
+                prev = self.store.read_manifest(last)["stats"]
+                seen_hint = int(prev["seen_total"]) if "seen_total" in prev else seen.count()
                 if self.config.adaptive_backoff:
                     # one round of evidence, not the in-session AIMD
                     # history (config docstring) — budgets restart from
@@ -708,11 +698,6 @@ class CrawlRun:
                     self._backoff_budgets, self._backoff_delays = self._next_backoff(
                         hm.select("host", "n_urls", "n_errors")
                     )
-        if resume and start > 0:
-            prev = self.store.read_manifest(start - 1)
-            seen_hint = int((prev or {}).get("stats", {}).get("seen_total", 0))
-        else:
-            seen_hint = 0
         stats = []
         finalize_prev = None
         nf_rows: int | None = None  # unknown for the seed/resume frontier
@@ -727,7 +712,7 @@ class CrawlRun:
                     finalize()  # durability over overlap (config.eager_commit)
                     finalize = None
                 finalize_prev = finalize
-                nf_rows = st.extras.get("next_frontier_rows")
+                nf_rows = st.deferred + st.retried + st.discovered
                 seen_hint = st.seen_total
                 stats.append(st)
         finally:

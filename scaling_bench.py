@@ -88,7 +88,7 @@ def worker(cpus: int, corpus_dir: str) -> None:
         links=corpus["links"],
         state_dir=tempfile.mkdtemp(prefix=f"scale_{cpus}_", dir=_state_root()),
         config=CrawlConfig(
-            run_id=f"scale-{cpus}", n_salts=8, collect_stats=False,
+            run_id=f"scale-{cpus}", n_salts=8,
             pages_buckets=int(os.environ.get("PATHIK_PAGES_BUCKETS", "256")),
         ),
     )

@@ -182,7 +182,7 @@ def test_v2_driver_crawl_round_trip(spark, corpus, tmp_path):
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        cfg = CrawlConfig(run_id="it-crawl", n_rounds=1, collect_stats=True)
+        cfg = CrawlConfig(run_id="it-crawl", n_rounds=1)
         run = CrawlRun(
             spark,
             corpus["pages"],
@@ -198,7 +198,7 @@ def test_v2_driver_crawl_round_trip(spark, corpus, tmp_path):
         assert stats and stats[-1].fetched > 0
         assert run.store.latest_complete_round() == 0
 
-        ref_cfg = CrawlConfig(run_id="it-crawl-ref", n_rounds=1, collect_stats=True)
+        ref_cfg = CrawlConfig(run_id="it-crawl-ref", n_rounds=1)
         ref = CrawlRun(
             spark,
             corpus["pages"],

@@ -4,6 +4,12 @@ checkpoint/resume (B5)."""
 
 from __future__ import annotations
 
+import json
+import os
+import threading
+from dataclasses import replace
+
+import pytest
 from pyspark.sql import functions as F
 
 from pathik_spark.config import CrawlConfig
@@ -20,6 +26,19 @@ def _run(spark, corpus, tmp_path, run_id, **cfg_kw):
         state_dir=str(tmp_path),
         config=cfg,
     )
+
+
+def _rows(run, round_no, table):
+    """A committed table's rows, columns and rows sorted."""
+    df = run.store.read_table(round_no, table)
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, corpus, tmp_path_factory):
+    """An uninterrupted 2-round crawl and its stats."""
+    run = _run(spark, corpus, tmp_path_factory.mktemp("ref"), "ref")
+    return run, run.run(corpus["seeds"], n_rounds=2)
 
 
 def test_single_round_end_to_end(spark, corpus, corpus_pd, tmp_path):
@@ -85,10 +104,8 @@ def test_multi_round_discovery_and_retry(spark, corpus, tmp_path):
         del urls
 
 
-def test_resume_equals_uninterrupted(spark, corpus, tmp_path):
-    # uninterrupted 2-round run
-    run_a = _run(spark, corpus, tmp_path, "ra", n_rounds=2)
-    run_a.run(corpus["seeds"], n_rounds=2)
+def test_resume_equals_uninterrupted(spark, corpus, tmp_path, uninterrupted):
+    run_a, _ = uninterrupted  # uninterrupted 2-round run
     # interrupted: run 1 round, then a fresh CrawlRun resumes round 1
     run_b1 = _run(spark, corpus, tmp_path, "rb", n_rounds=2)
     run_b1.run(corpus["seeds"], n_rounds=1)
@@ -96,12 +113,7 @@ def test_resume_equals_uninterrupted(spark, corpus, tmp_path):
     run_b2.run(corpus["seeds"], n_rounds=2, resume=True)
 
     for table in ("artifacts", "seen", "next_frontier"):
-        a = run_a.store.read_table(1, table)
-        b = run_b2.store.read_table(1, table)
-        cols = sorted(a.columns)
-        ra = sorted(map(tuple, a.select(*cols).collect()))
-        rb = sorted(map(tuple, b.select(*cols).collect()))
-        assert ra == rb, table
+        assert _rows(run_a, 1, table) == _rows(run_b2, 1, table), table
 
 
 def test_metrics_and_lineage_written(spark, corpus, tmp_path):
@@ -117,14 +129,11 @@ def test_metrics_and_lineage_written(spark, corpus, tmp_path):
     assert total == arts.count()
 
 
-def test_eager_commit_equals_deferred(spark, corpus, tmp_path):
+def test_eager_commit_equals_deferred(spark, corpus, tmp_path, uninterrupted):
     """config.eager_commit publishes each round's manifest before the
     next round starts (durability over commit/compute overlap) and must
     not change any produced table or stat."""
-    import json
-
-    run_d = _run(spark, corpus, tmp_path / "d", "rc", n_rounds=2)
-    stats_d = run_d.run(corpus["seeds"], n_rounds=2)
+    run_d, stats_d = uninterrupted
     run_e = _run(spark, corpus, tmp_path / "e", "rc", n_rounds=2, eager_commit=True)
     stats_e = run_e.run(corpus["seeds"], n_rounds=2)
     for sd, se in zip(stats_d, stats_e):
@@ -134,12 +143,7 @@ def test_eager_commit_equals_deferred(spark, corpus, tmp_path):
     for k in (0, 1):
         with open(tmp_path / "e" / "rc" / f"round={k}" / "manifest.json") as f:
             assert json.load(f)["stats"]["scheduled"] == stats_e[k].scheduled
-        a = run_d.store.read_table(k, "artifacts")
-        b = run_e.store.read_table(k, "artifacts")
-        cols = sorted(a.columns)
-        assert sorted(map(tuple, a.select(*cols).collect())) == sorted(
-            map(tuple, b.select(*cols).collect())
-        )
+        assert _rows(run_d, k, "artifacts") == _rows(run_e, k, "artifacts")
 
 
 def test_raw_robots_txt_input_equals_rules_table(spark, corpus, corpus_pd, tmp_path):
@@ -174,3 +178,94 @@ def test_raw_robots_txt_input_equals_rules_table(spark, corpus, corpus_pd, tmp_p
             {r["url"] for r in arts.select("url").collect()},
         )
     assert runs["table"] == runs["text"]
+
+
+def test_round_stats_match_committed_tables(spark, corpus, tmp_path):
+    """Every RoundStats field equals a count over the round's committed
+    tables, also after a resume from a manifest without seen_total.
+    max_attempts=2 makes round 1 consume round 0's retries unfetched;
+    seen_compact_every=2 compacts the seen union."""
+
+    def crawl(n_rounds):
+        run = _run(spark, corpus, tmp_path, "st", max_attempts=2, seen_compact_every=2)
+        return run, run.run(corpus["seeds"], n_rounds=n_rounds)
+
+    run, stats = crawl(3)
+    manifest = os.path.join(run.store._round_dir(2), "manifest.json")
+    with open(manifest) as f:
+        m = json.load(f)
+    del m["stats"]["seen_total"]
+    with open(manifest, "w") as f:
+        json.dump(m, f)
+    stats += crawl(4)[1]
+    assert [s.round for s in stats] == [0, 1, 2, 3]
+    seen_rows = exhausted = 0
+    for st in stats:
+        delta = run.store.read_table(st.round, "seen").count()
+        seen_rows, exhausted = seen_rows + delta, exhausted + delta - st.fetched
+        nf = run.store.read_table(st.round, "next_frontier").groupBy("src").count()
+        by_src = {r["src"]: r["count"] for r in nf.collect()}
+        assert st.scheduled == run.store.read_table(st.round, "artifacts").count()
+        assert st.scheduled == st.fetched + st.missing
+        assert (st.deferred, st.retried, st.discovered) == tuple(
+            by_src.get(src, 0) for src in ("deferred", "retry", "discovered")
+        )
+        assert st.seen_total == seen_rows
+    # every next-frontier channel ran; seen_total counted retry-exhausted rows
+    assert all(sum(getattr(s, k) for s in stats) for k in ("deferred", "retried", "discovered"))
+    assert exhausted > 0
+
+
+def _crawl_joined(run, seeds, n_rounds):
+    """(stats, error) of run.run in a daemon thread joined with a timeout:
+    a round waiting on a write that never ran fails instead of hanging."""
+    out = {}
+
+    def target():
+        try:
+            out["stats"] = run.run(seeds, n_rounds=n_rounds)
+        except Exception as exc:
+            out["error"] = exc
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), "crawl did not return"
+    return out.get("stats"), out.get("error")
+
+
+@pytest.mark.parametrize("failing_write", ["seen", "frontier"])
+def test_overlapped_write_failure_leaves_resumable_round(
+    spark, corpus, tmp_path, monkeypatch, uninterrupted, failing_write
+):
+    """Round 1's seen-delta write fails, or discovery raises before its
+    frontier append starts: the error reaches run(), round 1 has no
+    manifest, and a resumed run equals an uninterrupted one."""
+    from pathik_spark.plans import driver
+
+    def failing(fn, when):
+        def wrapped(*args, **kwargs):
+            if when(*args, **kwargs):
+                raise RuntimeError("injected")
+            return fn(*args, **kwargs)
+        return wrapped
+
+    run = _run(spark, corpus, tmp_path, "wf")
+    if failing_write == "seen":
+        run.store.write_table = failing(
+            run.store.write_table, lambda k, name, df: (k, name) == (1, "seen")
+        )
+    else:  # round 1's discovery: seq_base = (round + 1) * 10**12
+        monkeypatch.setattr(driver, "discover_links", failing(
+            driver.discover_links, lambda *a, seq_base, **kw: seq_base == 2 * 10**12
+        ))
+    _, error = _crawl_joined(run, corpus["seeds"], 2)
+    monkeypatch.undo()
+    assert str(error) == "injected"
+    assert run.store.latest_complete_round() == 0 and run.store.read_manifest(1) is None
+    stats, error = _crawl_joined(_run(spark, corpus, tmp_path, "wf"), corpus["seeds"], 2)
+    ref, ref_stats = uninterrupted
+    assert error is None and [s.round for s in stats] == [1]
+    assert replace(stats[0], extras={}) == replace(ref_stats[1], extras={})
+    for table in ("artifacts", "seen", "next_frontier"):
+        assert _rows(ref, 1, table) == _rows(run, 1, table), table
