@@ -68,13 +68,6 @@ class CrawlConfig:
     # page). False: discovery joins the external links table (fixture /
     # precomputed link-graph mode).
     discover_from_html: bool = False
-    # Durability/throughput knob: by default round k's manifest commit is
-    # deferred to overlap round k+1's compute (saves a serial barrier per
-    # round) at the cost of a one-round-wide loss window on hard kill —
-    # the work is recomputed, never corrupted. Set True to publish each
-    # round's manifest before the next round starts (expensive rounds /
-    # spot-instance clusters).
-    eager_commit: bool = False
     # Error-aware per-host backoff (operators/metrics.backoff_budgets):
     # when on, each round's non-fetched rate per host drives an AIMD
     # update of that host's max_per_round budget for the NEXT round —

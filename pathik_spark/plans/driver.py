@@ -17,8 +17,9 @@ Per round:
 Spark has no native iteration, so the loop is driver-side Python; each
 round is one declarative DataFrame plan that Catalyst optimizes whole
 (SURVEY.md §4.3.3). Checkpoint/resume comes from the SnapshotStore's
-atomic per-round manifests: a killed run resumes from the last complete
-round and recomputes the partial one idempotently.
+atomic per-round manifests. A round is published when run_round returns,
+so a killed run loses only the round in flight: it resumes from the last
+complete round and recomputes the partial one idempotently.
 
 Scale defaults: frontier repartitioned by host_hash before the
 scheduler, AQE skew-join on (session.py), bloom-sharded seen filter.
@@ -284,11 +285,12 @@ class CrawlRun:
         frontier: DataFrame,
         seen: DataFrame | None,
         seen_size_hint: int = 0,
-        finalize_prev=None,
-    ) -> tuple[DataFrame, DataFrame, RoundStats, "object"]:
-        """One round. ``seen_size_hint`` is the row count of ``seen`` (the
-        previous round's seen_total): it picks the seen filter, and this
-        round's seen_total adds the rows the round consumed to it."""
+    ) -> tuple[DataFrame, DataFrame, RoundStats]:
+        """One round, published when it returns: every write has finished
+        and the round's manifest is committed. ``seen_size_hint`` is the
+        row count of ``seen`` (the previous round's seen_total): it picks
+        the seen filter, and this round's seen_total adds the rows the
+        round consumed to it."""
         cfg = self.config
         spark = self.spark
         import time as _time
@@ -387,8 +389,10 @@ class CrawlRun:
         deferred_part = deferred.select(*FRONTIER_COLS).withColumn(
             "src", F.lit("deferred")
         ).observe(obs_deferred, F.count(F.lit(1)).alias("n"))
-        pool = ThreadPoolExecutor(max_workers=7)
-        try:
+        # leaving the block waits for every write the pool ran: a failed
+        # round raises with nothing left running, and a resume rewrites
+        # the same round directory
+        with ThreadPoolExecutor(max_workers=7) as pool:
             f_deferred = pool.submit(
                 lambda: deferred_part.write.mode("overwrite").parquet(nf_path)
             )
@@ -537,11 +541,6 @@ class CrawlRun:
                 ]
 
             f_dust = pool.submit(_update_dust) if cfg.learn_dust else None
-            # only the round-(k+1) inputs are waited on here; host_metrics
-            # and lineage (off the critical path) keep running and are
-            # joined by finalize(), which the NEXT round calls just before
-            # its own commit — so their job latency overlaps the next
-            # round's heavy compute.
             seen_delta = f_seen.result()
             frontier_out = f_front.result()  # after f_deferred, inside it
             arts_n, rest_n = obs_arts.get, obs_rest.get
@@ -577,11 +576,9 @@ class CrawlRun:
             compacted = cfg.seen_compact_every and (round_no + 1) % cfg.seen_compact_every == 0
             if compacted:
                 seen_out = self._write_seen_compact(round_no, seen_out)
-        except BaseException:
-            # no write of a failed round keeps running: a resume rewrites
-            # the same round directory
-            pool.shutdown(wait=True, cancel_futures=True)
-            raise
+            # host_metrics and lineage ran beside the seen and frontier writes
+            f_hm.result()
+            f_lin.result()
         stats = RoundStats(
             round=round_no,
             scheduled=arts_n["n"],
@@ -595,26 +592,13 @@ class CrawlRun:
         )
         for df in persisted:
             df.unpersist()
-
-        def finalize() -> None:
-            """Join the off-critical-path writes and atomically publish the
-            round. Called by the NEXT round just before its own commit (so
-            manifests stay in order), or by run() at loop exit — either way
-            a crash before this leaves a partial round that resume rewrites
-            idempotently."""
-            f_hm.result()
-            f_lin.result()
-            pool.shutdown(wait=False)
-            self.store.commit(
-                round_no,
-                ["artifacts", "host_metrics", "lineage", "seen", "next_frontier"]
-                + (["seen_compact"] if compacted else []),
-                stats={k: v for k, v in asdict(stats).items() if k not in ("round", "extras")},
-            )
-
-        if finalize_prev is not None:
-            finalize_prev()  # previous round's commit, overlapped with this compute
-        return frontier_out.drop("src"), seen_out, stats, finalize
+        self.store.commit(
+            round_no,
+            ["artifacts", "host_metrics", "lineage", "seen", "next_frontier"]
+            + (["seen_compact"] if compacted else []),
+            stats={k: v for k, v in asdict(stats).items() if k not in ("round", "extras")},
+        )
+        return frontier_out.drop("src"), seen_out, stats
 
     def _write_seen_compact(self, round_no: int, seen_out: DataFrame) -> DataFrame:
         """Compaction writes ONE table BUCKETED by url_hash with a fixed
@@ -699,23 +683,12 @@ class CrawlRun:
                         hm.select("host", "n_urls", "n_errors")
                     )
         stats = []
-        finalize_prev = None
         nf_rows: int | None = None  # unknown for the seed/resume frontier
-        try:
-            for k in range(start, n_rounds):
-                if nf_rows == 0 or (nf_rows is None and len(frontier.take(1)) == 0):
-                    break
-                frontier, seen, st, finalize = self.run_round(
-                    k, frontier, seen, seen_size_hint=seen_hint, finalize_prev=finalize_prev
-                )
-                if self.config.eager_commit:
-                    finalize()  # durability over overlap (config.eager_commit)
-                    finalize = None
-                finalize_prev = finalize
-                nf_rows = st.deferred + st.retried + st.discovered
-                seen_hint = st.seen_total
-                stats.append(st)
-        finally:
-            if finalize_prev is not None:
-                finalize_prev()
+        for k in range(start, n_rounds):
+            if nf_rows == 0 or (nf_rows is None and len(frontier.take(1)) == 0):
+                break
+            frontier, seen, st = self.run_round(k, frontier, seen, seen_size_hint=seen_hint)
+            nf_rows = st.deferred + st.retried + st.discovered
+            seen_hint = st.seen_total
+            stats.append(st)
         return stats

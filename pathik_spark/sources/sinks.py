@@ -158,7 +158,8 @@ def kafka_message_rows(
     """S6: kafka-sink-shaped rows (key, value, headers, topic-ready).
     Feed to ``.write.format("kafka")`` on a real cluster, or write as a
     table in-sandbox (identical shape)."""
-    assert content_type in CONTENT_TYPES, content_type
+    if content_type not in CONTENT_TYPES:
+        raise ValueError(f"content_type must be html|markdown|both, got {content_type!r}")
     fetched = artifacts.filter(F.col("status") == "fetched")
     out = []
     if content_type in ("html", "both"):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import json
 import os
 import threading
-from dataclasses import replace
+from dataclasses import asdict, replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -129,23 +129,6 @@ def test_metrics_and_lineage_written(spark, corpus, tmp_path):
     assert total == arts.count()
 
 
-def test_eager_commit_equals_deferred(spark, corpus, tmp_path, uninterrupted):
-    """config.eager_commit publishes each round's manifest before the
-    next round starts (durability over commit/compute overlap) and must
-    not change any produced table or stat."""
-    run_d, stats_d = uninterrupted
-    run_e = _run(spark, corpus, tmp_path / "e", "rc", n_rounds=2, eager_commit=True)
-    stats_e = run_e.run(corpus["seeds"], n_rounds=2)
-    for sd, se in zip(stats_d, stats_e):
-        assert (sd.scheduled, sd.fetched, sd.seen_total) == (
-            se.scheduled, se.fetched, se.seen_total
-        )
-    for k in (0, 1):
-        with open(tmp_path / "e" / "rc" / f"round={k}" / "manifest.json") as f:
-            assert json.load(f)["stats"]["scheduled"] == stats_e[k].scheduled
-        assert _rows(run_d, k, "artifacts") == _rows(run_e, k, "artifacts")
-
-
 def test_raw_robots_txt_input_equals_rules_table(spark, corpus, corpus_pd, tmp_path):
     """CrawlRun accepts raw robots.txt bodies: rendering the fixture's
     rules as robots.txt text and letting the driver parse them yields
@@ -182,13 +165,18 @@ def test_raw_robots_txt_input_equals_rules_table(spark, corpus, corpus_pd, tmp_p
 
 def test_round_stats_match_committed_tables(spark, corpus, tmp_path):
     """Every RoundStats field equals a count over the round's committed
-    tables, also after a resume from a manifest without seen_total.
-    max_attempts=2 makes round 1 consume round 0's retries unfetched;
-    seen_compact_every=2 compacts the seen union."""
+    tables and the stats in its manifest, also after a resume from a
+    manifest without seen_total. max_attempts=2 makes round 1 consume
+    round 0's retries unfetched; seen_compact_every=2 compacts the seen
+    union."""
 
     def crawl(n_rounds):
         run = _run(spark, corpus, tmp_path, "st", max_attempts=2, seen_compact_every=2)
-        return run, run.run(corpus["seeds"], n_rounds=n_rounds)
+        stats = run.run(corpus["seeds"], n_rounds=n_rounds)
+        for st in stats:
+            want = {k: v for k, v in asdict(st).items() if k not in ("round", "extras")}
+            assert run.store.read_manifest(st.round)["stats"] == want, st.round
+        return run, stats
 
     run, stats = crawl(3)
     manifest = os.path.join(run.store._round_dir(2), "manifest.json")
@@ -234,13 +222,14 @@ def _crawl_joined(run, seeds, n_rounds):
     return out.get("stats"), out.get("error")
 
 
-@pytest.mark.parametrize("failing_write", ["seen", "frontier"])
+@pytest.mark.parametrize("failing_write", ["seen", "frontier", "host_metrics", "lineage"])
 def test_overlapped_write_failure_leaves_resumable_round(
     spark, corpus, tmp_path, monkeypatch, uninterrupted, failing_write
 ):
-    """Round 1's seen-delta write fails, or discovery raises before its
-    frontier append starts: the error reaches run(), round 1 has no
-    manifest, and a resumed run equals an uninterrupted one."""
+    """Round 1's seen-delta write fails, discovery raises before round 1's
+    frontier append starts, or round 0's host_metrics or lineage write
+    fails: the error reaches run(), the failed round has no manifest, no
+    later round starts, and a resumed run equals an uninterrupted one."""
     from pathik_spark.plans import driver
 
     def failing(fn, when):
@@ -250,22 +239,29 @@ def test_overlapped_write_failure_leaves_resumable_round(
             return fn(*args, **kwargs)
         return wrapped
 
+    failed = 0 if failing_write in ("host_metrics", "lineage") else 1
     run = _run(spark, corpus, tmp_path, "wf")
-    if failing_write == "seen":
-        run.store.write_table = failing(
-            run.store.write_table, lambda k, name, df: (k, name) == (1, "seen")
-        )
-    else:  # round 1's discovery: seq_base = (round + 1) * 10**12
+    if failing_write == "frontier":  # seq_base = (round + 1) * 10**12
         monkeypatch.setattr(driver, "discover_links", failing(
             driver.discover_links, lambda *a, seq_base, **kw: seq_base == 2 * 10**12
         ))
+    else:
+        run.store.write_table = failing(
+            run.store.write_table, lambda k, name, df: (k, name) == (failed, failing_write)
+        )
     _, error = _crawl_joined(run, corpus["seeds"], 2)
     monkeypatch.undo()
     assert str(error) == "injected"
-    assert run.store.latest_complete_round() == 0 and run.store.read_manifest(1) is None
+    assert run.store.committed_rounds() == list(range(failed))
+    assert not os.path.exists(run.store._round_dir(failed + 1)), (
+        f"round {failed + 1} ran after round {failed} failed"
+    )
     stats, error = _crawl_joined(_run(spark, corpus, tmp_path, "wf"), corpus["seeds"], 2)
     ref, ref_stats = uninterrupted
-    assert error is None and [s.round for s in stats] == [1]
-    assert replace(stats[0], extras={}) == replace(ref_stats[1], extras={})
-    for table in ("artifacts", "seen", "next_frontier"):
-        assert _rows(ref, 1, table) == _rows(run, 1, table), table
+    assert error is None and [s.round for s in stats] == list(range(failed, 2))
+    assert [replace(s, extras={}) for s in stats] == [
+        replace(s, extras={}) for s in ref_stats[failed:]
+    ]
+    for k in range(failed, 2):
+        for table in ("artifacts", "seen", "next_frontier"):
+            assert _rows(ref, k, table) == _rows(run, k, table), (k, table)

@@ -66,6 +66,11 @@ def test_kafka_rows_shape_and_filters(spark, artifacts):
     assert header_keys == ["url", "timestamp", "sessionID", "contentType"]
 
 
+def test_kafka_rows_reject_unknown_content_type(artifacts):
+    with pytest.raises(ValueError, match="content_type"):
+        S.kafka_message_rows(artifacts, content_type="pdf")
+
+
 @pytest.mark.skipif(
     not os.environ.get("PATHIK_KAFKA_BROKERS"),
     reason="live-broker smoke: set PATHIK_KAFKA_BROKERS to run "
