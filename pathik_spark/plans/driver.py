@@ -47,6 +47,7 @@ from pathik_spark.operators.metrics import (
 from pathik_spark.operators.robots import attach_robots, filter_disallowed
 from pathik_spark.operators.scheduler import schedule_round
 from pathik_spark.operators.seen import build_bloom_shards, seen_filter
+from pathik_spark.session import codegen_compiles
 from pathik_spark.sources.tables import SnapshotStore, make_store
 
 FRONTIER_COLS = ["url", "seq", "priority", "attempt"]
@@ -251,13 +252,15 @@ class CrawlRun:
 
             path = os.path.join(self.store.root, "links_prepared.parquet")
             marker = os.path.join(self.store.root, "links_prepared.done")
+            links = self.links.withColumn(
+                "src_hash", U.url_hash_expr(U.canonical_col(F.col("src_url")))
+            )
             if not os.path.exists(marker):
-                self.links.withColumn(
-                    "src_hash", U.url_hash_expr(U.canonical_col(F.col("src_url")))
-                ).write.mode("overwrite").parquet(path)
+                links.write.mode("overwrite").parquet(path)
                 with open(marker, "w") as f:
                     f.write("ok")
-            self._links_prepared = self.spark.read.parquet(path)
+            # the plan's schema: no footer-inference job
+            self._links_prepared = self.spark.read.schema(links.schema).parquet(path)
         return self._links_prepared
 
     def _fetch_join(self, scheduled: DataFrame, selected: DataFrame) -> DataFrame:
@@ -297,6 +300,7 @@ class CrawlRun:
 
         _timers: dict[str, float] = {}
         _t0 = _time.perf_counter()
+        compiles_0 = codegen_compiles(spark)
 
         def _tick(name: str) -> None:
             nonlocal _t0
@@ -491,7 +495,7 @@ class CrawlRun:
                 )
                 f_deferred.result()  # deferred slice finished (overlapped with artifacts)
                 rest.write.mode("append").parquet(nf_path)
-                return self.spark.read.parquet(nf_path)
+                return self.spark.read.schema(deferred_part.schema).parquet(nf_path)
 
             # the derived tables all scan the committed artifacts parquet
             # and are mutually independent: their fixed per-job latency
@@ -588,7 +592,7 @@ class CrawlRun:
             retried=rest_n["retried"],
             discovered=rest_n["discovered"],
             seen_total=seen_size_hint + arts_n["c"],
-            extras={"timers": _timers},
+            extras={"timers": _timers, "codegen_compiles": codegen_compiles(spark) - compiles_0},
         )
         for df in persisted:
             df.unpersist()

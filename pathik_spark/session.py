@@ -8,6 +8,12 @@ In local mode the Python workers share the driver's filesystem: they get
 the engine's package root on their path (UDFs referencing pathik_spark
 then unpickle from any cwd) and run the lean worker daemon
 (worker_daemon.py), which keeps Spark's archives off their import path.
+
+Spark's class cache for generated code is sized to a crawl round's
+working set (CODEGEN_CACHE_ENTRIES), so a round reuses the classes the
+previous round compiled instead of recompiling them. The cache is a
+static conf, set here because every session the engine starts comes
+from get_spark; a caller's extra_conf still overrides it.
 """
 
 from __future__ import annotations
@@ -17,6 +23,14 @@ import os
 from pyspark.sql import SparkSession
 
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Entries of Spark's generated-class cache (spark.sql.codegen.cache.maxEntries,
+# default 100). One crawl_polite round compiles ~160 classes, a resume
+# adds ~70 for its own plans and pages preparation ~10: a working set
+# above 100 means LRU eviction drops every class before its next use and
+# each round recompiles all of them (~150 compiles a round, 4-round
+# crawl). 1000 holds about 4x a round's set.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -43,6 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
@@ -73,3 +88,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in the driver JVM so
+    far (CodegenMetrics' compilation-time histogram count). In local mode
+    the executors share that JVM, so their compiles count too."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

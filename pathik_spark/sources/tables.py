@@ -57,13 +57,14 @@ class SnapshotStore:
         """Write one table of an in-progress round and return it read back
         from disk — downstream consumers then scan columnar parquet instead
         of re-executing the producing plan (critical for the extraction
-        UDFs: they run exactly once per round). NOT visible to resume
-        until commit()."""
+        UDFs: they run exactly once per round). The read takes the
+        written plan's schema, so it launches no footer-inference job.
+        NOT visible to resume until commit()."""
         rdir = self._round_dir(round_no)
         os.makedirs(rdir, exist_ok=True)
         path = os.path.join(rdir, f"{name}.parquet")
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def commit(self, round_no: int, table_names: list[str], stats: dict | None = None) -> None:
         """Atomically publish a round (manifest rename). A crash before

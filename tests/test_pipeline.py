@@ -11,6 +11,7 @@ from dataclasses import asdict, replace
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pathik_spark.config import CrawlConfig
 from pathik_spark.plans.driver import CrawlRun
@@ -202,6 +203,35 @@ def test_round_stats_match_committed_tables(spark, corpus, tmp_path):
     # every next-frontier channel ran; seen_total counted retry-exhausted rows
     assert all(sum(getattr(s, k) for s in stats) for k in ("deferred", "retried", "discovered"))
     assert exhausted > 0
+
+
+def test_round_tables_read_back_with_their_file_schema(spark, corpus, tmp_path, monkeypatch):
+    """Each table a round writes comes back with the schema a plain read
+    of its files infers (the read-back takes the written plan's schema
+    instead of running a footer job), next_frontier and the prepared
+    links included."""
+    run = _run(spark, corpus, tmp_path, "schema", n_rounds=1)
+    returned = {}
+    write_table = run.store.write_table
+
+    def recording(round_no, name, df):
+        returned[name] = write_table(round_no, name, df)
+        return returned[name]
+
+    monkeypatch.setattr(run.store, "write_table", recording)
+    seeds = corpus["seeds"].select(
+        "url", F.col("seq").cast("long"), F.col("priority").cast("int")
+    ).withColumn("attempt", F.lit(0))
+    frontier = run.run_round(0, seeds, None)[0]
+    assert set(returned) == {"artifacts", "host_metrics", "lineage", "seen"}
+    rdir = run.store._round_dir(0)
+    for name, df in returned.items():
+        on_disk = spark.read.parquet(os.path.join(rdir, f"{name}.parquet")).schema
+        assert df.schema == on_disk, name
+    nf = spark.read.parquet(os.path.join(rdir, "next_frontier.parquet")).schema
+    assert frontier.schema == StructType([f for f in nf.fields if f.name != "src"])
+    links = spark.read.parquet(os.path.join(run.store.root, "links_prepared.parquet"))
+    assert run._prepared_links().schema == links.schema
 
 
 def _crawl_joined(run, seeds, n_rounds):
