@@ -142,9 +142,12 @@ def test_repeat_crawl_compiles_no_generated_code(spark, corpus, tmp_path):
     time (with the default 100-entry cache it recompiles ~150 classes).
 
     A repeat can now and then compile a few classes the first crawl did
-    not (8, once in 24 repeats run beside the full test suite; the
-    round's writes run concurrently). So the crawl repeats, up to three
-    times, until one compiles nothing."""
+    not: AQE numbers the whole-stage codegen stages of the query that
+    joins the frontier with the robots broadcast in the order its
+    exchanges materialize, and the stage number is part of each class's
+    source, so a crawl that meets the other order compiles the same
+    pipelines (4 classes, driver and executor each) once more. So the
+    crawl repeats, up to three times, until one compiles nothing."""
     from pathik_spark.config import CrawlConfig
     from pathik_spark.plans.driver import CrawlRun
 
